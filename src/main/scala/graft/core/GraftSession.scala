@@ -29,33 +29,69 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       // events.ts is parquet TIMESTAMP(NANOS): read as long nanos, see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // streaming keyed state lives in RocksDB, not on the JVM heap —
-      // the reference runs its window stores on RocksDB for the same
-      // reason (ClickstreamJoinExample.scala:281-299,
-      // Stores.persistentWindowStore): at 100 TB of keyed state the
-      // in-memory HDFSBackedStateStore is an executor OOM, while
-      // RocksDB spills to local disk and checkpoints changelogs.
-      // Spark ships the provider + JNI in core; StreamingSpec runs a
-      // stateful-parity leg on it.
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      )
       .config("spark.ui.enabled", "false")
+      .config(StatefulStreamingSettings.toMap)
       // native SQL functions + the TopKPerKey planner strategy
       .withExtensions(new graft.plans.GraftExtensions)
 
+  /** The settings every stateful streaming query of a graft session
+    * runs under; [[builder]] and the reuse branch of [[getOrCreate]]
+    * both apply this one list.
+    *
+    *  - Keyed state lives in RocksDB, not on the JVM heap. The
+    *    reference runs its window stores on RocksDB for the same reason
+    *    (ClickstreamJoinExample.scala:281-299,
+    *    Stores.persistentWindowStore): at 100 TB of keyed state the
+    *    in-memory HDFSBackedStateStore is an executor OOM, while
+    *    RocksDB spills to local disk. Spark ships the provider and its
+    *    JNI in core.
+    *  - Changelog checkpointing: a commit appends one changelog file
+    *    per store instead of flushing, zipping and uploading a RocksDB
+    *    snapshot and deleting its local copy. Snapshots still happen,
+    *    every `minDeltasForSnapshot` batches, on the maintenance thread.
+    *    Checkpoints written with it off stay readable.
+    *  - Local (`file`) checkpoints go through [[ForkFreeLocalFileSystem]]
+    *    and [[ForkFreeLocalFs]], which start no `chmod`/`readlink`
+    *    process per file. Other schemes are untouched.
+    *
+    * Together they took one `graftbench` stream run from 5 953 process
+    * starts to 40 (37 of them `rm -rf` of RocksDB working directories)
+    * and its traced state-commit p50 from 385 to 19 ms (BASELINE.md,
+    * "Interval-join gap: root cause").
+    */
+  val StatefulStreamingSettings: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName
+  )
+
+  /** Applies [[StatefulStreamingSettings]] to a running session: the
+    * `spark.hadoop.*` ones to its Hadoop configuration, the rest to its
+    * SQL conf.
+    */
+  def applyStatefulStreamingSettings(spark: SparkSession): Unit =
+    StatefulStreamingSettings.foreach {
+      case (k, v) if k.startsWith("spark.hadoop.") =>
+        spark.sparkContext.hadoopConfiguration.set(k.stripPrefix("spark.hadoop."), v)
+      case (k, v) => spark.conf.set(k, v)
+    }
+
   /** Measured constant behind [[streamingShufflePartitions]]: target
-    * rows per shuffle partition per micro-batch. Round 11's
-    * StreamJoinProfile root cause: every streaming state operator
-    * commits its RocksDB store(s) once per PARTITION per batch (a
-    * symmetric stream-stream join keeps four stores), and the
-    * per-(batch × partition × store) commit/fsync is fixed-cost — at
-    * 5 k-row batches a cores-sized 32 partitions paid 128 store
-    * commits for ~160 rows of work each, and dropping to 8 partitions
-    * lifted the interval join 2.8× with identical results. 640 puts
-    * the measured sweet spot (5 000 rows → 8 partitions) on the curve
-    * and leaves large batches cores-bound, where the default is right.
+    * rows per shuffle partition per micro-batch. Every streaming state
+    * operator commits its state store(s) once per PARTITION per batch
+    * (a symmetric stream-stream join keeps four stores), and each commit
+    * has a fixed cost — at 5 k-row batches a cores-sized 32 partitions
+    * paid 128 store commits for ~160 rows of work each, and dropping to
+    * 8 partitions lifted the interval join 2.8× with identical results
+    * (round 11). Most of that fixed cost turned out to be process forks
+    * of Hadoop's local filesystem, not RocksDB fsync; with
+    * [[StatefulStreamingSettings]] a commit forks nothing, but it still
+    * writes one file per store, so the rule stands (its 640 was not
+    * re-measured). 640 puts the measured sweet spot (5 000 rows → 8
+    * partitions) on the curve and leaves large batches cores-bound,
+    * where the default is right.
     */
   val StreamTargetRowsPerPartition = 640L
 
@@ -96,13 +132,12 @@ object GraftSession {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ graft.plans.TopKPerKey.RowNumberLimitToTopK
       }
-      // the state-store provider is read from the session conf at each
-      // query start, so the RocksDB posture applies to reused sessions
-      // through the runtime conf as well
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      )
+      // the state-store settings are read from the session conf at each
+      // query start, and FileContext, which streaming checkpoints write
+      // through, resolves its filesystem from the Hadoop conf at each
+      // lookup, so they apply to reused sessions at runtime as well (a
+      // `file` FileSystem already in Hadoop's cache stays in use)
+      applyStatefulStreamingSettings(spark)
     }
     spark.sparkContext.setLogLevel("WARN")
     spark

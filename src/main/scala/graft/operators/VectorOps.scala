@@ -1549,11 +1549,16 @@ object VectorOps {
         .map(_.getSeq[Double](1).toArray)
     )
 
-  /** Slice caller-supplied seed vectors (≥ [[PqKs]]) into the M
-    * per-subspace codebooks.
+  /** Slice caller-supplied seed vectors into the M per-subspace
+    * codebooks: one codeword per seed, at most [[PqKs]]. A corpus with
+    * fewer than [[PqKs]] vectors past the queries gets that many
+    * codewords — what the oracle's `vec_id < NumQueryVecs + PqKs` seed
+    * filter selects too — and one with none has nothing to encode.
     */
-  def pqCodebooksOf(seeds: Array[Array[Double]]): Array[Array[Array[Double]]] =
-    Array.tabulate(PqM, PqKs)((m, j) => seeds(j).slice(m * PqSubDim, (m + 1) * PqSubDim))
+  def pqCodebooksOf(seeds: Array[Array[Double]]): Array[Array[Array[Double]]] = {
+    require(seeds.nonEmpty, "PQ codebooks need at least one seed vector past the query vectors")
+    Array.tabulate(PqM, math.min(PqKs, seeds.length))((m, j) => seeds(j).slice(m * PqSubDim, (m + 1) * PqSubDim))
+  }
 
   /** Per-row PQ encoding: code m = argmax-dot codeword of subspace m
     * (ties to the lowest codeword id — max of (dot, -j)). One codegen'd

@@ -11,6 +11,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Runs `body` under [[graft.core.GraftSession.StatefulStreamingSettings]],
+    * applied to the shared session as a reused graft session gets them,
+    * then restores the settings the rest of the suite runs under.
+    */
+  def withStatefulStreamingSettings[T](body: => T): T = {
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val prior = graft.core.GraftSession.StatefulStreamingSettings.map { case (k, _) =>
+      if (k.startsWith("spark.hadoop.")) {
+        val hk = k.stripPrefix("spark.hadoop.")
+        val v = Option(hadoop.get(hk))
+        () => v.fold(hadoop.unset(hk))(hadoop.set(hk, _))
+      } else {
+        val v = spark.conf.getOption(k)
+        () => v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    }
+    graft.core.GraftSession.applyStatefulStreamingSettings(spark)
+    try body
+    finally prior.foreach(_())
+  }
 }
 
 object SparkSpec {

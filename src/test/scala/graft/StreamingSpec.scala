@@ -101,12 +101,9 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    // the provider is read from the session conf at query start; scope
-    // it here so the rest of the suite keeps the default store
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // the settings are read at query start; scope them here so the
+    // rest of the suite keeps the default store
+    withStatefulStreamingSettings {
       val input = MemoryStream[Event]
       val q = StreamingOps
         .firstWinsDedup(input.toDS(), windowSec = 15)
@@ -138,9 +135,6 @@ class StreamingSpec extends SparkSpec {
         .filter(_.startsWith("rocksdb"))
       q.stop()
       assert(rocksMetrics.nonEmpty, "no rocksdb custom metrics in state operator progress")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

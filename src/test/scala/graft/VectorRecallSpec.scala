@@ -753,4 +753,27 @@ class VectorRecallSpec extends SparkSpec {
         f"best-alignment recall@1 = $recall%.3f ($agree/${exact.size})"
     )
   }
+
+  test("c108 IMI-ADC runs on a 20-embedding corpus: codewords clamp to the 10 seeds past the queries") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_c108_small").toString
+    spark.read
+      .parquet(s"$sf0001/embeddings.parquet")
+      .filter(col("vec_id") < 20)
+      .write
+      .parquet(s"$dir/embeddings.parquet")
+    val seeds = Array.tabulate(20 - VectorOps.NumQueryVecs)(i => Array.fill(VectorOps.Dim)(i.toDouble))
+    assert(VectorOps.pqCodebooksOf(seeds).map(_.length).toSeq == Seq.fill(VectorOps.PqM)(10))
+    assert(VectorOps.pqCodebooksOf(seeds ++ seeds).map(_.length).toSeq == Seq.fill(VectorOps.PqM)(VectorOps.PqKs))
+    val none = intercept[IllegalArgumentException](VectorOps.pqCodebooksOf(Array.empty))
+    assert(none.getMessage.contains("at least one seed vector"))
+
+    val rows = VectorOps.c108AnnImiAdc(spark, dir).collect()
+    val byQuery = rows.groupBy(_.getLong(0))
+    assert(byQuery.keySet == (0L until VectorOps.NumQueryVecs).toSet)
+    byQuery.values.foreach { rs =>
+      assert(rs.map(_.getLong(2)).sorted.toSeq == (1L to rs.length.toLong))
+      assert(rs.length <= 5 && rs.forall(r => r.getLong(1) >= VectorOps.NumQueryVecs && r.getLong(1) < 20))
+    }
+  }
 }
