@@ -5,7 +5,7 @@ import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -49,11 +49,20 @@ object ForkFreeRawLocalFileSystem {
 class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
 
 /** `fs.AbstractFileSystem.file.impl`, the `FileContext` side that
-  * streaming checkpoints write through: Hadoop's `LocalFs` with
+  * streaming checkpoints write and read through: Hadoop's `LocalFs` with
   * [[ForkFreeRawLocalFileSystem]] underneath. `uri` is ignored, as in
   * `LocalFs`.
+  *
+  * Unlike `LocalFs`, a read checks the file's `.crc`.
+  * `FileContext.open(Path)` calls `open(Path)`, which `FilterFs` hands
+  * to the raw filesystem unchecked, so a flipped byte in an offset log,
+  * commit log or state file read back silently. Here it goes through
+  * `ChecksumFs`'s checksummed `open(Path, bufferSize)` and raises
+  * `ChecksumException`.
   */
-class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new ForkFreeLocalFs.Raw(conf))
+class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new ForkFreeLocalFs.Raw(conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object ForkFreeLocalFs {
 

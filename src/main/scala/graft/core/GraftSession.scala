@@ -80,13 +80,15 @@ object GraftSession {
 
   /** Measured constant behind [[streamingShufflePartitions]]: target
     * rows per shuffle partition per micro-batch. Every streaming state
-    * operator commits its state store(s) once per PARTITION per batch
-    * (a symmetric stream-stream join keeps four stores), and each commit
-    * has a fixed cost — at 5 k-row batches a cores-sized 32 partitions
-    * paid 128 store commits for ~160 rows of work each, and dropping to
-    * 8 partitions lifted the interval join 2.8× with identical results
-    * (round 11). Most of that fixed cost turned out to be process forks
-    * of Hadoop's local filesystem, not RocksDB fsync; with
+    * operator commits its state store(s) once per PARTITION per batch,
+    * and each commit has a fixed cost — at 5 k-row batches a cores-sized
+    * 32 partitions paid 128 store commits for ~160 rows of work each
+    * (Spark's symmetric stream-stream join, which the interval joins then
+    * ran on, keeps four stores), and dropping to 8 partitions lifted the
+    * interval join 2.8× with identical results (round 11). The interval
+    * joins are now one keyed state operator and commit one store per
+    * partition, as dedup does. Most of that fixed cost turned out to be
+    * process forks of Hadoop's local filesystem, not RocksDB fsync; with
     * [[StatefulStreamingSettings]] a commit forks nothing, but it still
     * writes one file per store, so the rule stands (its 640 was not
     * re-measured). 640 puts the measured sweet spot (5 000 rows → 8

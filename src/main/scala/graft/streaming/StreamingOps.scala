@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StructField, StructType}
 
 /** Structured Streaming re-expressions of the reference topologies
   * (SURVEY.md §2 D-series).
@@ -18,9 +22,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `flatMapGroupsWithState` holds exactly the per-key bit the
   * reference's WindowStore guard held, with event-time timeout playing
   * the role of retention; windowed aggregation + watermark replaces
-  * `TimeWindows.of(...).until(...)`; the interval stream-stream join
-  * replaces `JoinWindows`. State is partitioned by key across
-  * executors, so the topology scales horizontally exactly like a
+  * `TimeWindows.of(...).until(...)`; a keyed interval join over the
+  * union of both sides replaces `JoinWindows`. State is partitioned by
+  * key across executors, so the topology scales horizontally exactly like a
   * Streams app scales by task — but with Spark's shuffle service and
   * checkpointing underneath.
   */
@@ -108,19 +112,16 @@ object StreamingOps {
     * (batch).
     *
     * Input frames: clicks(click_id, user_id, click_ts),
-    * views(v_id, v_user, v_ts).
+    * views(v_id, v_user, v_ts); any further columns pass through. The
+    * output is Spark's `leftOuter` join of the two on
+    * `user_id = v_user AND v_ts BETWEEN click_ts - W AND click_ts`, row
+    * for row, with that join's schema; it runs as one keyed state
+    * operator ([[intervalJoin]]). A checkpoint written by the Spark
+    * stream-stream join this replaced cannot be resumed: the restart
+    * fails with an error and emits nothing.
     */
-  def clickstreamLeftJoin(clicks: DataFrame, views: DataFrame, joinWindowSec: Long): DataFrame = {
-    val c = clicks.withWatermark("click_ts", "10 minutes")
-    val v = views.withWatermark("v_ts", "10 minutes")
-    c.join(
-      v,
-      expr(
-        s"user_id = v_user AND v_ts BETWEEN click_ts - INTERVAL $joinWindowSec SECONDS AND click_ts"
-      ),
-      "leftOuter"
-    )
-  }
+  def clickstreamLeftJoin(clicks: DataFrame, views: DataFrame, joinWindowSec: Long): DataFrame =
+    intervalJoin(clicks, views, joinWindowSec, fullOuter = false)
 
   /** Windowed stream-stream FULL OUTER join — Kafka Streams
     * `outerJoin`, the DSL sibling of [[clickstreamLeftJoin]] (the
@@ -131,19 +132,172 @@ object StreamingOps {
     * streaming form of the batch
     * [[graft.operators.EventStreamOps.a14OuterJoin]] decomposition
     * (which exists only because BATCH Spark lacks a non-equi
-    * full-outer strategy; the streaming engine supports it natively
-    * with watermarks on both sides).
+    * full-outer strategy). The output is Spark's `fullOuter`
+    * stream-stream join, row for row; as with [[clickstreamLeftJoin]],
+    * a checkpoint written by that Spark join cannot be resumed.
     */
-  def clickstreamOuterJoin(clicks: DataFrame, views: DataFrame, joinWindowSec: Long): DataFrame = {
+  def clickstreamOuterJoin(clicks: DataFrame, views: DataFrame, joinWindowSec: Long): DataFrame =
+    intervalJoin(clicks, views, joinWindowSec, fullOuter = true)
+
+  /** The interval join of [[clickstreamLeftJoin]] and
+    * [[clickstreamOuterJoin]] as one `flatMapGroupsWithState` keyed by
+    * user, instead of Spark's symmetric hash join (which keeps four
+    * state stores per partition and, on every copy of its physical
+    * plan, broadcasts the Hadoop configuration: 24 broadcasts per
+    * micro-batch, most of a small batch's planning time).
+    *
+    * Both watermarked sides are unioned into one stream of (key, event
+    * time, click row, view row), so the operator sees the watermark and
+    * drops late rows itself. Per user the state holds the clicks and
+    * the views still inside retention, each with its event time and
+    * whether it has matched. A micro-batch reproduces the Spark join
+    * exactly:
+    *   - new clicks match the stored views, then new views match the
+    *     stored clicks, this batch's included;
+    *   - the state watermarks are Spark's own for this condition
+    *     (`StreamingJoinHelper`, one ms below the bound for a non-strict
+    *     inequality): a click leaves once `click_ts <= watermark - 1 ms`,
+    *     a view once `v_ts + W <= watermark - 1 ms`;
+    *   - a new row already past that bound (it arrived between the
+    *     previous batch's watermark, which filters late rows, and this
+    *     one's) still matches this batch's rows and then leaves;
+    *   - a leaving click that never matched emits with null view
+    *     columns, and under full outer so does a leaving view, with
+    *     null click columns.
+    * The event-time timeout is the earliest pending departure, so a
+    * user with no new rows is visited exactly when a row of theirs
+    * leaves. Rows with a null event time can never match or leave, so
+    * they are not stored. A null user matches nothing; here alone the
+    * operator departs from Spark's full outer join, which pairs a
+    * null-user click with a null-user view (its left outer join drops
+    * null-user views before joining).
+    */
+  private def intervalJoin(clicks: DataFrame, views: DataFrame, joinWindowSec: Long, fullOuter: Boolean): DataFrame = {
     val c = clicks.withWatermark("click_ts", "10 minutes")
     val v = views.withWatermark("v_ts", "10 minutes")
-    c.join(
-      v,
-      expr(
-        s"user_id = v_user AND v_ts BETWEEN click_ts - INTERVAL $joinWindowSec SECONDS AND click_ts"
+    val sides = c
+      .select(
+        col("user_id").as("key"),
+        col("click_ts").as("time"),
+        struct(col("*")).as("click"),
+        lit(null).cast(v.schema).as("view")
+      )
+      .union(
+        v.select(
+          col("v_user").as("key"),
+          col("v_ts").as("time"),
+          lit(null).cast(c.schema).as("click"),
+          struct(col("*")).as("view")
+        )
+      )
+    def pending(row: StructType) = ArrayType(
+      StructType(
+        Seq(
+          StructField("us", LongType, nullable = false),
+          StructField("matched", BooleanType, nullable = false),
+          StructField("row", row, nullable = false)
+        )
       ),
-      "fullOuter"
+      containsNull = false
     )
+    val stateType = StructType(
+      Seq(
+        StructField("clicks", pending(c.schema), nullable = false),
+        StructField("views", pending(v.schema), nullable = false)
+      )
+    )
+    val outType = StructType(
+      c.schema.fields.map(f => if (fullOuter) f.copy(nullable = true) else f) ++
+        v.schema.fields.map(_.copy(nullable = true))
+    )
+    val joined = sides
+      .groupBy(col("key"))
+      .as[Row, Row](Encoders.row(sides.select("key").schema), Encoders.row(sides.schema))
+      .flatMapGroupsWithState[Row, Row](OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        IntervalJoinState(joinWindowSec * 1000000L, fullOuter, c.schema.length, v.schema.length)
+      )(Encoders.row(stateType), Encoders.row(outType))
+    // the join's output keeps each side's event-time column metadata
+    joined.select(outType.fields.toSeq.zip(joined.columns).map { case (f, n) =>
+      joined.col(n).as(f.name, f.metadata)
+    }: _*)
+  }
+
+  /** A row waiting in [[intervalJoin]]'s state. */
+  private final class Pending(val us: Long, var matched: Boolean, val row: Row)
+
+  /** [[intervalJoin]]'s per-user state function; `windowUs` is W in µs. */
+  private final case class IntervalJoinState(windowUs: Long, fullOuter: Boolean, clickWidth: Int, viewWidth: Int)
+      extends ((Row, Iterator[Row], GroupState[Row]) => Iterator[Row]) {
+
+    /** The watermark (ms) a row leaves after: Spark evicts once
+      * `us <= (watermark - 1) * 1000`, i.e. once the watermark exceeds
+      * ⌈us / 1000⌉.
+      */
+    private def leavesAfter(us: Long): Long = Math.floorDiv(us + 999L, 1000L)
+
+    private def clickLeavesAfter(p: Pending): Long = leavesAfter(p.us)
+
+    private def viewLeavesAfter(p: Pending): Long = leavesAfter(p.us + windowUs)
+
+    private def inWindow(click: Pending, view: Pending): Boolean = view.us <= click.us && view.us >= click.us - windowUs
+
+    private def pair(click: Row, view: Row): Row =
+      Row.fromSeq((if (click == null) Seq.fill(clickWidth)(null) else click.toSeq) ++
+        (if (view == null) Seq.fill(viewWidth)(null) else view.toSeq))
+
+    def apply(key: Row, rows: Iterator[Row], state: GroupState[Row]): Iterator[Row] = {
+      val watermark = state.getCurrentWatermarkMs()
+      def load(i: Int): mutable.ArrayBuffer[Pending] =
+        if (!state.exists) mutable.ArrayBuffer.empty
+        else
+          mutable.ArrayBuffer.from(
+            state.get.getSeq[Row](i).iterator.map(p => new Pending(p.getLong(0), p.getBoolean(1), p.getStruct(2)))
+          )
+      val clicks = load(0)
+      val views = load(1)
+      val out = mutable.ArrayBuffer.empty[Row]
+      if (!state.hasTimedOut) {
+        val matchable = !key.isNullAt(0)
+        def tryPair(click: Pending, view: Pending): Unit =
+          if (matchable && inWindow(click, view)) {
+            out += pair(click.row, view.row)
+            click.matched = true
+            view.matched = true
+          }
+        // Spark's join order: this batch's clicks meet the stored views,
+        // then this batch's views meet every click
+        val newViews = mutable.ArrayBuffer.empty[Pending]
+        rows.foreach { r =>
+          if (!r.isNullAt(1)) {
+            val us = DateTimeUtils.anyToMicros(r.get(1))
+            if (r.isNullAt(3)) {
+              val click = new Pending(us, false, r.getStruct(2))
+              views.foreach(tryPair(click, _))
+              clicks += click
+            } else newViews += new Pending(us, false, r.getStruct(3))
+          }
+        }
+        newViews.foreach { view => clicks.foreach(tryPair(_, view)); views += view }
+      }
+      clicks.filterInPlace { p =>
+        val stays = clickLeavesAfter(p) >= watermark
+        if (!stays && !p.matched) out += pair(p.row, null)
+        stays
+      }
+      views.filterInPlace { p =>
+        val stays = viewLeavesAfter(p) >= watermark
+        if (!stays && fullOuter && !p.matched) out += pair(null, p.row)
+        stays
+      }
+      if (clicks.isEmpty && views.isEmpty) state.remove()
+      else {
+        def rowsOf(ps: mutable.ArrayBuffer[Pending]) = ps.toSeq.map(p => Row(p.us, p.matched, p.row))
+        state.update(Row(rowsOf(clicks), rowsOf(views)))
+        val next = (clicks.iterator.map(clickLeavesAfter) ++ views.iterator.map(viewLeavesAfter)).min
+        state.setTimeoutTimestamp(math.max(next, 1L))
+      }
+      out.iterator
+    }
   }
 
   /** Tumbling-window aggregation with watermark — the

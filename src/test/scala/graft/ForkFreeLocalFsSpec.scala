@@ -11,6 +11,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import graft.core.{ForkFreeLocalFileSystem, ForkFreeLocalFs, GraftSession}
 import graft.streaming.StreamingOps
@@ -123,12 +124,50 @@ class ForkFreeLocalFsSpec extends SparkSpec {
         Seq(crc, intact, outcome(read(fc, p).length), outcome(readFs()))
       } finally fs.close()
     }
-    val forkFree = run(forkFree = true)
-    assert(forkFree == run(forkFree = false))
     // per file: .crc written, intact read, then the flipped byte read
-    // through FileContext (which, in Hadoop's LocalFs too, does not
-    // verify a local file's .crc) and through FileSystem
-    assert(forkFree == Seq.fill(2)(Seq(true, true, 4096, "ChecksumException")).flatten)
+    // through FileContext and through FileSystem. Hadoop's LocalFs does
+    // not check a local file's .crc on FileContext.open(Path), so there
+    // the flipped byte reads back silently; ForkFreeLocalFs checks it.
+    assert(run(forkFree = true) == Seq.fill(2)(Seq(true, true, "ChecksumException", "ChecksumException")).flatten)
+    assert(run(forkFree = false) == Seq.fill(2)(Seq(true, true, 4096, "ChecksumException")).flatten)
+  }
+
+  test("a flipped byte in a stopped firstWinsDedup checkpoint's offset log fails the restart, naming the file") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = Files.createTempDirectory("graft_crc_ckpt")
+    val input = MemoryStream[Event]
+    def start() = StreamingOps
+      .firstWinsDedup(input.toDS(), windowSec = 900)
+      .writeStream
+      .format("noop")
+      .option("checkpointLocation", ckpt.toString)
+      .start()
+    def append(q: StreamingQuery, i: Int): Unit = {
+      input.addData((0 until 20).map(j => Event(i * 20L + j, new Timestamp(1700000000000L + (i * 20L + j) * 1000L), j % 5, "click", j)))
+      q.processAllAvailable()
+    }
+    withStatefulStreamingSettings {
+      val q = start()
+      try (0 until 3).foreach(append(q, _))
+      finally q.stop()
+      val offsets = ckpt.resolve("offsets")
+      val latest = Files.list(offsets).iterator().asScala.map(_.getFileName.toString).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+      val file = offsets.resolve(latest)
+      assert(Files.exists(offsets.resolve(s".$latest.crc")))
+      // the source offset's last digit becomes another digit: still a
+      // well-formed offset log, which without the .crc check reads back
+      val bytes = Files.readAllBytes(file)
+      val at = bytes.lastIndexWhere(b => b >= '0' && b <= '9')
+      bytes(at) = (bytes(at) ^ 1).toByte
+      Files.write(file, bytes)
+      val restarted = start()
+      val error =
+        try intercept[StreamingQueryException](append(restarted, 3))
+        finally restarted.stop()
+      val messages = Iterator.iterate[Throwable](error)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+      assert(messages.exists(m => m != null && m.contains("Checksum error") && m.contains(s"offsets/$latest")), messages)
+    }
   }
 
   test("permissions after create and mkdirs match the forking implementation's, under the same umask") {

@@ -1419,7 +1419,9 @@ class StreamingSpec extends SparkSpec {
     // and assert the state operator's row count PLATEAUS at
     // ~(watermark + join window) x rate while total ingest keeps
     // growing — the difference between state ∝ stream length (leaks,
-    // dies at 100 TB replay) and state ∝ retention horizon.
+    // dies at 100 TB replay) and state ∝ retention horizon. The joins
+    // keep one state row per user, so this row count is the users with
+    // rows in retention; IntervalJoinSpec bounds the rows each user holds.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
