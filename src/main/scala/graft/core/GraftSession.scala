@@ -30,9 +30,30 @@ object GraftSession {
       // events.ts is parquet TIMESTAMP(NANOS): read as long nanos, see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config(StatefulStreamingSettings.toMap)
       // native SQL functions + the TopKPerKey planner strategy
       .withExtensions(new graft.plans.GraftExtensions)
+
+  /** Entries in Spark's cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Guava splits
+    * the cache into 4 LRU segments, so the default keeps about 25 per
+    * segment, and a workload that cycles through more classes than that
+    * compiles the same sources again and again: at the default, a
+    * `graftbench` curation run compiled its 85 distinct sources 553
+    * times, against 136 with this size. The cache is keyed by class
+    * loader as well as source, so a whole-stage class compiled by the
+    * driver's compile check and again in a task takes two entries: one
+    * `graft.Verify` run at sf0.01 fills 2 323 entries with 1 385
+    * distinct sources. 3 000 holds them all with room for segments that
+    * fill unevenly.
+    *
+    * It is a static conf, so only sessions built by [[builder]] set it,
+    * and Spark reads it once per JVM, when code is first generated: a
+    * JVM whose first code generation ran under another session keeps
+    * that session's cache size.
+    */
+  val CodegenCacheEntries = 3000
 
   /** The settings every stateful streaming query of a graft session
     * runs under; [[builder]] and the reuse branch of [[getOrCreate]]

@@ -110,6 +110,8 @@ object ProcessorApiJoin {
     * clicks matched against "any view in the join window" — the a2-style
     * simplification. Kept as the simpler topology; [[apply]] is the
     * composite-key topology matching the reference's exact key structure.
+    * The [[JoinState]] is kept as bytes ([[StateBytes]]); a checkpoint
+    * that stored it as a struct cannot be resumed.
     */
   def userKeyed(
       events: Dataset[Event],
@@ -120,22 +122,23 @@ object ProcessorApiJoin {
     import events.sparkSession.implicits._
     val joinMs = joinWindowSec * 1000
     val dedupMs = dedupWindowSec * 1000
+    val codec = StateBytes[JoinState]
 
     events
       .withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[JoinState, EnrichedClick](
+      .flatMapGroupsWithState[Array[Byte], EnrichedClick](
         OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout
-      ) { (user: Long, rows: Iterator[Event], state: GroupState[JoinState]) =>
+      ) { (user: Long, rows: Iterator[Event], state: GroupState[Array[Byte]]) =>
         if (state.hasTimedOut) {
           state.remove()
           Iterator.empty
         } else {
-          val st0 = state.getOption.getOrElse(JoinState(Nil, Map.empty, 0L))
+          val st0 = state.getOption.map(codec.decode).getOrElse(JoinState(Nil, Map.empty, 0L))
           val (st, out) =
             advance(user, st0, rows.toSeq, joinMs, dedupMs, state.getCurrentWatermarkMs())
-          state.update(st)
+          state.update(codec.encode(st))
           state.setTimeoutTimestamp(st.maxTs + 2 * math.max(joinMs, dedupMs))
           out.iterator
         }
@@ -322,7 +325,10 @@ object ProcessorApiJoin {
     * reference's exact key structure (PvKey / EvPvKey stores). Start
     * queries over it inside [[withChainedStatefulAllowed]]. Spec:
     * ProcessorApiJoinSpec (scenario + redelivery) and stream-batch
-    * parity with a11's oracle-gated semantics.
+    * parity with a11's oracle-gated semantics. Both stages keep their
+    * state ([[AttributionState]], [[PvJoinState]]) as bytes
+    * ([[StateBytes]]); a checkpoint that stored it as a struct cannot be
+    * resumed.
     */
   def apply(
       events: Dataset[Event],
@@ -333,21 +339,23 @@ object ProcessorApiJoin {
     import events.sparkSession.implicits._
     val joinMs = joinWindowSec * 1000
     val dedupMs = dedupWindowSec * 1000
+    val attributionCodec = StateBytes[AttributionState]
+    val joinCodec = StateBytes[PvJoinState]
 
     val rekeyed: Dataset[Attributed] = events
       .withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttributionState, Attributed](
+      .flatMapGroupsWithState[Array[Byte], Attributed](
         OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout
-      ) { (_: Long, rows: Iterator[Event], state: GroupState[AttributionState]) =>
+      ) { (_: Long, rows: Iterator[Event], state: GroupState[Array[Byte]]) =>
         if (state.hasTimedOut) {
           state.remove()
           Iterator.empty
         } else {
-          val st0 = state.getOption.getOrElse(AttributionState(Nil, 0L))
+          val st0 = state.getOption.map(attributionCodec.decode).getOrElse(AttributionState(Nil, 0L))
           val (st, out) = attribute(st0, rows.toSeq, joinMs, state.getCurrentWatermarkMs())
-          state.update(st)
+          state.update(attributionCodec.encode(st))
           state.setTimeoutTimestamp(st.maxTs + 2 * joinMs)
           out.iterator
         }
@@ -356,18 +364,18 @@ object ProcessorApiJoin {
     rekeyed
       .withWatermark("ts", watermarkDelay)
       .groupByKey(a => PvKey(a.user_id, a.pv_id))
-      .flatMapGroupsWithState[PvJoinState, EnrichedClick](
+      .flatMapGroupsWithState[Array[Byte], EnrichedClick](
         OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout
-      ) { (key: PvKey, rows: Iterator[Attributed], state: GroupState[PvJoinState]) =>
+      ) { (key: PvKey, rows: Iterator[Attributed], state: GroupState[Array[Byte]]) =>
         if (state.hasTimedOut) {
           state.remove()
           Iterator.empty
         } else {
-          val st0 = state.getOption.getOrElse(PvJoinState(0L, viewSeen = false, Map.empty, 0L))
+          val st0 = state.getOption.map(joinCodec.decode).getOrElse(PvJoinState(0L, viewSeen = false, Map.empty, 0L))
           val (st, out) =
             joinAdvance(key, st0, rows.toSeq, joinMs, dedupMs, state.getCurrentWatermarkMs())
-          state.update(st)
+          state.update(joinCodec.encode(st))
           state.setTimeoutTimestamp(st.maxTs + 2 * math.max(joinMs, dedupMs))
           out.iterator
         }

@@ -118,7 +118,9 @@ object StreamingOps {
     * for row, with that join's schema; it runs as one keyed state
     * operator ([[intervalJoin]]). A checkpoint written by the Spark
     * stream-stream join this replaced cannot be resumed: the restart
-    * fails with an error and emits nothing.
+    * fails with an error and emits nothing. Nor can one whose state was
+    * written as a struct of two lists, before the state was kept as
+    * bytes ([[StateBytes]]).
     */
   def clickstreamLeftJoin(clicks: DataFrame, views: DataFrame, joinWindowSec: Long): DataFrame =
     intervalJoin(clicks, views, joinWindowSec, fullOuter = false)
@@ -134,7 +136,8 @@ object StreamingOps {
     * (which exists only because BATCH Spark lacks a non-equi
     * full-outer strategy). The output is Spark's `fullOuter`
     * stream-stream join, row for row; as with [[clickstreamLeftJoin]],
-    * a checkpoint written by that Spark join cannot be resumed.
+    * a checkpoint written by that Spark join, or with the state as a
+    * struct rather than bytes, cannot be resumed.
     */
   def clickstreamOuterJoin(clicks: DataFrame, views: DataFrame, joinWindowSec: Long): DataFrame =
     intervalJoin(clicks, views, joinWindowSec, fullOuter = true)
@@ -150,8 +153,8 @@ object StreamingOps {
     * time, click row, view row), so the operator sees the watermark and
     * drops late rows itself. Per user the state holds the clicks and
     * the views still inside retention, each with its event time and
-    * whether it has matched. A micro-batch reproduces the Spark join
-    * exactly:
+    * whether it has matched, kept as bytes ([[intervalJoinCodec]]). A
+    * micro-batch reproduces the Spark join exactly:
     *   - new clicks match the stored views, then new views match the
     *     stored clicks, this batch's included;
     *   - the state watermarks are Spark's own for this condition
@@ -190,6 +193,28 @@ object StreamingOps {
           struct(col("*")).as("view")
         )
       )
+    val outType = StructType(
+      c.schema.fields.map(f => if (fullOuter) f.copy(nullable = true) else f) ++
+        v.schema.fields.map(_.copy(nullable = true))
+    )
+    val joined = sides
+      .groupBy(col("key"))
+      .as[Row, Row](Encoders.row(sides.select("key").schema), Encoders.row(sides.schema))
+      .flatMapGroupsWithState[Array[Byte], Row](OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        IntervalJoinState(joinWindowSec * 1000000L, fullOuter, c.schema.length, v.schema.length, intervalJoinCodec(c.schema, v.schema))
+      )(Encoders.BINARY, Encoders.row(outType))
+    // the join's output keeps each side's event-time column metadata
+    joined.select(outType.fields.toSeq.zip(joined.columns).map { case (f, n) =>
+      joined.col(n).as(f.name, f.metadata)
+    }: _*)
+  }
+
+  /** The codec of [[intervalJoin]]'s per-user state for click and view
+    * rows of these schemas: a row of two lists, the clicks and the
+    * views, each entry the row's event time in µs, whether it has
+    * matched, and the row.
+    */
+  private[graft] def intervalJoinCodec(clicks: StructType, views: StructType): StateBytes[Row] = {
     def pending(row: StructType) = ArrayType(
       StructType(
         Seq(
@@ -200,34 +225,26 @@ object StreamingOps {
       ),
       containsNull = false
     )
-    val stateType = StructType(
-      Seq(
-        StructField("clicks", pending(c.schema), nullable = false),
-        StructField("views", pending(v.schema), nullable = false)
+    StateBytes(
+      Encoders.row(
+        StructType(
+          Seq(StructField("clicks", pending(clicks), nullable = false), StructField("views", pending(views), nullable = false))
+        )
       )
     )
-    val outType = StructType(
-      c.schema.fields.map(f => if (fullOuter) f.copy(nullable = true) else f) ++
-        v.schema.fields.map(_.copy(nullable = true))
-    )
-    val joined = sides
-      .groupBy(col("key"))
-      .as[Row, Row](Encoders.row(sides.select("key").schema), Encoders.row(sides.schema))
-      .flatMapGroupsWithState[Row, Row](OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        IntervalJoinState(joinWindowSec * 1000000L, fullOuter, c.schema.length, v.schema.length)
-      )(Encoders.row(stateType), Encoders.row(outType))
-    // the join's output keeps each side's event-time column metadata
-    joined.select(outType.fields.toSeq.zip(joined.columns).map { case (f, n) =>
-      joined.col(n).as(f.name, f.metadata)
-    }: _*)
   }
 
   /** A row waiting in [[intervalJoin]]'s state. */
   private final class Pending(val us: Long, var matched: Boolean, val row: Row)
 
   /** [[intervalJoin]]'s per-user state function; `windowUs` is W in µs. */
-  private final case class IntervalJoinState(windowUs: Long, fullOuter: Boolean, clickWidth: Int, viewWidth: Int)
-      extends ((Row, Iterator[Row], GroupState[Row]) => Iterator[Row]) {
+  private final case class IntervalJoinState(
+      windowUs: Long,
+      fullOuter: Boolean,
+      clickWidth: Int,
+      viewWidth: Int,
+      codec: StateBytes[Row]
+  ) extends ((Row, Iterator[Row], GroupState[Array[Byte]]) => Iterator[Row]) {
 
     /** The watermark (ms) a row leaves after: Spark evicts once
       * `us <= (watermark - 1) * 1000`, i.e. once the watermark exceeds
@@ -245,14 +262,13 @@ object StreamingOps {
       Row.fromSeq((if (click == null) Seq.fill(clickWidth)(null) else click.toSeq) ++
         (if (view == null) Seq.fill(viewWidth)(null) else view.toSeq))
 
-    def apply(key: Row, rows: Iterator[Row], state: GroupState[Row]): Iterator[Row] = {
+    def apply(key: Row, rows: Iterator[Row], state: GroupState[Array[Byte]]): Iterator[Row] = {
       val watermark = state.getCurrentWatermarkMs()
+      val stored = state.getOption.map(codec.decode)
       def load(i: Int): mutable.ArrayBuffer[Pending] =
-        if (!state.exists) mutable.ArrayBuffer.empty
-        else
-          mutable.ArrayBuffer.from(
-            state.get.getSeq[Row](i).iterator.map(p => new Pending(p.getLong(0), p.getBoolean(1), p.getStruct(2)))
-          )
+        mutable.ArrayBuffer.from(
+          stored.iterator.flatMap(_.getSeq[Row](i)).map(p => new Pending(p.getLong(0), p.getBoolean(1), p.getStruct(2)))
+        )
       val clicks = load(0)
       val views = load(1)
       val out = mutable.ArrayBuffer.empty[Row]
@@ -292,7 +308,7 @@ object StreamingOps {
       if (clicks.isEmpty && views.isEmpty) state.remove()
       else {
         def rowsOf(ps: mutable.ArrayBuffer[Pending]) = ps.toSeq.map(p => Row(p.us, p.matched, p.row))
-        state.update(Row(rowsOf(clicks), rowsOf(views)))
+        state.update(codec.encode(Row(rowsOf(clicks), rowsOf(views))))
         val next = (clicks.iterator.map(clickLeavesAfter) ++ views.iterator.map(viewLeavesAfter)).min
         state.setTimeoutTimestamp(math.max(next, 1L))
       }
@@ -350,15 +366,18 @@ object StreamingOps {
     * group). Runs in Update mode with no watermark: a quota has no
     * event-time horizon, new documents may always displace old ones.
     * StreamingSpec replays the documents table and asserts each key's
-    * LAST emission equals the batch quota row-for-row.
+    * LAST emission equals the batch quota row-for-row. The state is kept
+    * as bytes ([[StateBytes]]); a checkpoint that stored it as a
+    * (seq, top-k) struct cannot be resumed.
     */
   def streamingDomainQuota(docs: Dataset[DocRow], k: Int): Dataset[QuotaUpdate] = {
     import docs.sparkSession.implicits._
+    val codec = StateBytes[(Long, Seq[(Long, Long)])]
     docs
       .groupByKey(_.source)
-      .mapGroupsWithState[(Long, Seq[(Long, Long)]), QuotaUpdate](GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[DocRow], state: GroupState[(Long, Seq[(Long, Long)])]) =>
-          val (seq0, prev) = state.getOption.getOrElse((0L, Seq.empty[(Long, Long)]))
+      .mapGroupsWithState[Array[Byte], QuotaUpdate](GroupStateTimeout.NoTimeout) {
+        (source: String, rows: Iterator[DocRow], state: GroupState[Array[Byte]]) =>
+          val (seq0, prev) = state.getOption.map(codec.decode).getOrElse((0L, Seq.empty[(Long, Long)]))
           // insert each row into the sorted top-k, truncating at k:
           // O(k) memory and O(k) work per row, independent of batch size
           val merged = rows.foldLeft(prev) { (acc, r) =>
@@ -373,7 +392,7 @@ object StreamingOps {
             }
           }
           val seq = seq0 + 1
-          state.update((seq, merged))
+          state.update(codec.encode((seq, merged)))
           QuotaUpdate(source, seq, merged.map(_._2), merged.map(_._1))
       }
   }
@@ -484,16 +503,18 @@ object StreamingOps {
     * redelivery inflates counts — superset-of-heavy-hitters still
     * holds for the delivered multiset. Deduplicate upstream
     * (dropDuplicatesWithinWatermark on the source's record id) for
-    * effectively-once counting. Update mode, no watermark.
+    * effectively-once counting. Update mode, no watermark. The state is
+    * kept as bytes ([[StateBytes]]); a checkpoint that stored it as a
+    * (seq, total, counters) struct cannot be resumed.
     */
   def streamingHeavyHitters(toks: Dataset[TokenOcc], capacity: Int): Dataset[HeavyHittersUpdate] = {
     import toks.sparkSession.implicits._
+    val codec = StateBytes[(Long, Long, Map[String, Long])]
     toks
       .groupByKey(_.key)
-      .mapGroupsWithState[(Long, Long, Map[String, Long]), HeavyHittersUpdate](
-        GroupStateTimeout.NoTimeout
-      ) { (key: String, rows: Iterator[TokenOcc], state: GroupState[(Long, Long, Map[String, Long])]) =>
-        val (seq0, total0, prev) = state.getOption.getOrElse((0L, 0L, Map.empty[String, Long]))
+      .mapGroupsWithState[Array[Byte], HeavyHittersUpdate](GroupStateTimeout.NoTimeout) {
+        (key: String, rows: Iterator[TokenOcc], state: GroupState[Array[Byte]]) =>
+        val (seq0, total0, prev) = state.getOption.map(codec.decode).getOrElse((0L, 0L, Map.empty[String, Long]))
         val buf = scala.collection.mutable.HashMap.from(prev)
         var total = total0
         rows.foreach { r =>
@@ -501,7 +522,7 @@ object StreamingOps {
           total += 1
         }
         val seq = seq0 + 1
-        state.update((seq, total, buf.toMap))
+        state.update(codec.encode((seq, total, buf.toMap)))
         val sorted = buf.toSeq.sortBy(_._1)
         HeavyHittersUpdate(key, seq, total, sorted.map(_._1), sorted.map(_._2))
       }
@@ -677,21 +698,18 @@ object StreamingOps {
     * a time. A doc's priority is deterministic (salted-md5 coin), so
     * at-least-once redelivery is absorbed by the same
     * already-in-reservoir guard as the quota stream. Update mode, no
-    * watermark: a reservoir has no event-time horizon.
+    * watermark: a reservoir has no event-time horizon. The state is kept
+    * as bytes ([[StateBytes]]); a checkpoint that stored it as a
+    * (seq, reservoir) struct cannot be resumed.
     */
   def streamingWeightedSample(docs: Dataset[WeightedDocRow], k: Int): Dataset[SampleUpdate] = {
     import docs.sparkSession.implicits._
+    val codec = StateBytes[(Long, Seq[(Double, Long, Long)])]
     docs
       .groupByKey(_.lang)
-      .mapGroupsWithState[(Long, Seq[(Double, Long, Long)]), SampleUpdate](
-        GroupStateTimeout.NoTimeout
-      ) {
-        (
-            lang: String,
-            rows: Iterator[WeightedDocRow],
-            state: GroupState[(Long, Seq[(Double, Long, Long)])]
-        ) =>
-          val (seq0, prev) = state.getOption.getOrElse((0L, Seq.empty[(Double, Long, Long)]))
+      .mapGroupsWithState[Array[Byte], SampleUpdate](GroupStateTimeout.NoTimeout) {
+        (lang: String, rows: Iterator[WeightedDocRow], state: GroupState[Array[Byte]]) =>
+          val (seq0, prev) = state.getOption.map(codec.decode).getOrElse((0L, Seq.empty[(Double, Long, Long)]))
           // insert each row into the sorted reservoir, truncating at k:
           // O(k) memory and O(k) work per row, independent of batch size
           val merged = rows.foldLeft(prev) { (acc, r) =>
@@ -708,7 +726,7 @@ object StreamingOps {
             }
           }
           val seq = seq0 + 1
-          state.update((seq, merged))
+          state.update(codec.encode((seq, merged)))
           SampleUpdate(lang, seq, merged.map(_._2), merged.map(_._3), merged.map(_._1))
       }
   }
@@ -791,21 +809,24 @@ object StreamingOps {
     * non-families, c1's business). Sets make the fold idempotent, so
     * redelivery can never inflate counts and the last emission under
     * in-order replay equals the batch c68 row exactly (spec-verified).
+    * The state is kept as bytes ([[StateBytes]]); a checkpoint that
+    * stored it as a (docs, hashes) struct cannot be resumed.
     */
   def streamingPrefixDedup(rows: Dataset[HeadRow]): Dataset[HeadFamilyUpdate] = {
     import rows.sparkSession.implicits._
+    val codec = StateBytes[(Set[Long], Set[String])]
     rows
       .groupByKey(_.head_md5)
-      .flatMapGroupsWithState[(Set[Long], Set[String]), HeadFamilyUpdate](
+      .flatMapGroupsWithState[Array[Byte], HeadFamilyUpdate](
         OutputMode.Update(),
         GroupStateTimeout.NoTimeout
-      ) { (head: String, it: Iterator[HeadRow], state: GroupState[(Set[Long], Set[String])]) =>
-        var (docs, fulls) = state.getOption.getOrElse((Set.empty[Long], Set.empty[String]))
+      ) { (head: String, it: Iterator[HeadRow], state: GroupState[Array[Byte]]) =>
+        var (docs, fulls) = state.getOption.map(codec.decode).getOrElse((Set.empty[Long], Set.empty[String]))
         it.foreach { r =>
           docs += r.doc_id
           fulls += r.full_md5
         }
-        state.update((docs, fulls))
+        state.update(codec.encode((docs, fulls)))
         Iterator.single(
           HeadFamilyUpdate(
             head,

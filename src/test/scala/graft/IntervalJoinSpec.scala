@@ -6,10 +6,12 @@ import java.sql.Timestamp
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
-import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+import org.apache.spark.sql.functions.{col, expr, lit, struct}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryException}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StructField, StructType}
 
 import graft.streaming.StreamingOps
 
@@ -17,7 +19,8 @@ import graft.streaming.StreamingOps
   * [[StreamingOps.clickstreamOuterJoin]] against the Spark stream-stream
   * join they replaced, kept here as the reference: the same output
   * multiset, schema and late-row drops on the same seeded micro-batches,
-  * from one keyed state operator — and a checkpoint of the Spark join is
+  * from one keyed state operator — and a checkpoint of the Spark join, or
+  * one that kept the join's state as a struct rather than as bytes, is
   * refused, not resumed.
   */
 class IntervalJoinSpec extends SparkSpec {
@@ -145,10 +148,13 @@ class IntervalJoinSpec extends SparkSpec {
       val join = graftJoin(if (outer) "fullOuter" else "leftOuter")(clicks, views)
       val q = join.writeStream.format("noop").option("checkpointLocation", ckpt).start()
       // rows held across all users' click and view lists, read back from
-      // the checkpoint's state store
+      // the checkpoint's state store and decoded by the join's codec
+      val codec = StreamingOps.intervalJoinCodec(clicks.schema, views.schema)
       def held(): Long = spark.read.format("statestore").load(ckpt)
-        .selectExpr("sum(size(value.groupState.clicks) + size(value.groupState.views))")
-        .head().getLong(0)
+        .select("value.groupState.value")
+        .collect()
+        .map { r => val st = codec.decode(r.getAs[Array[Byte]](0)); st.getSeq(0).size.toLong + st.getSeq(1).size }
+        .sum
       // 40 steps of 60 s event time, 10 users with a click and a view each
       // per step: 40 min of stream against a 10 min watermark + 60 s window
       val heldByStep = (0 until 40).map { step =>
@@ -170,15 +176,57 @@ class IntervalJoinSpec extends SparkSpec {
     }
   }
 
-  test("a checkpoint written by the Spark stream-stream join is refused, with no output") {
+  /** An operator shaped like [[StreamingOps.clickstreamLeftJoin]], the
+    * same union of both sides keyed by user, whose state is stored with
+    * Spark's struct-of-lists encoder instead of as bytes: each user's
+    * clicks and views, unmatched. It emits nothing.
+    */
+  private def structStateJoin(clicks: DataFrame, views: DataFrame): DataFrame = {
+    val c = clicks.withWatermark("click_ts", "10 minutes")
+    val v = views.withWatermark("v_ts", "10 minutes")
+    val sides = c
+      .select(col("user_id").as("key"), col("click_ts").as("time"), struct(col("*")).as("click"), lit(null).cast(v.schema).as("view"))
+      .union(v.select(col("v_user").as("key"), col("v_ts").as("time"), lit(null).cast(c.schema).as("click"), struct(col("*")).as("view")))
+    def pending(row: StructType) = ArrayType(
+      StructType(
+        Seq(
+          StructField("us", LongType, nullable = false),
+          StructField("matched", BooleanType, nullable = false),
+          StructField("row", row, nullable = false)
+        )
+      ),
+      containsNull = false
+    )
+    val stateType = StructType(
+      Seq(StructField("clicks", pending(c.schema), nullable = false), StructField("views", pending(v.schema), nullable = false))
+    )
+    val outType = StructType(c.schema.fields ++ v.schema.fields.map(_.copy(nullable = true)))
+    sides
+      .groupBy(col("key"))
+      .as[Row, Row](Encoders.row(sides.select("key").schema), Encoders.row(sides.schema))
+      .flatMapGroupsWithState[Row, Row](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
+          val timed = rows.filter(!_.isNullAt(1)).toSeq
+          def side(i: Int) = state.getOption.fold(Seq.empty[Row])(_.getSeq[Row](i - 2)) ++
+            timed.filter(!_.isNullAt(i)).map(r => Row(DateTimeUtils.anyToMicros(r.get(1)), false, r.getStruct(i)))
+          state.update(Row(side(2), side(3)))
+          state.setTimeoutTimestamp(T0 + 24 * 60 * Minute)
+          Iterator.empty
+      }(Encoders.row(stateType), Encoders.row(outType))
+  }
+
+  /** Writes a checkpoint with `old` over four seeded batches, then
+    * restarts [[StreamingOps.clickstreamLeftJoin]] on it with one more;
+    * returns the first run, the restart's error and what it emitted.
+    */
+  private def restartLeftJoin(old: (DataFrame, DataFrame) => DataFrame): (Run, StreamingQueryException, Seq[String]) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val data = batches(seed = 13L)
     val ckpt = Files.createTempDirectory("graft_join_ckpt").toString
     val in = MemoryStream[In]
     withStatefulStreamingSettings(withPartitions(2) {
-      val old = drive(sparkJoin("leftOuter"), data.take(4), in, ckpt)
-      assert(old.rows.nonEmpty)
+      val before = drive(old, data.take(4), in, ckpt)
       val emitted = mutable.ArrayBuffer.empty[String]
       val (clicks, views) = sides(in.toDF())
       val q: StreamingQuery = StreamingOps
@@ -197,9 +245,22 @@ class IntervalJoinSpec extends SparkSpec {
             q.processAllAvailable()
           }
         finally q.stop()
-      assert(error.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"), error.getMessage)
-      assert(emitted.isEmpty, s"the restart emitted ${emitted.size} rows")
+      (before, error, emitted.toSeq)
     })
+  }
+
+  test("a checkpoint written by the Spark stream-stream join is refused, with no output") {
+    val (before, error, emitted) = restartLeftJoin(sparkJoin("leftOuter"))
+    assert(before.rows.nonEmpty)
+    assert(error.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"), error.getMessage)
+    assert(emitted.isEmpty, s"the restart emitted ${emitted.size} rows")
+  }
+
+  test("a checkpoint whose join state is a struct of lists, not bytes, is refused, with no output") {
+    val (before, error, emitted) = restartLeftJoin(structStateJoin)
+    assert(before.rows.isEmpty && before.plan.count(_ == "FlatMapGroupsWithStateExec") == 1, before)
+    assert(error.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"), error.getMessage)
+    assert(emitted.isEmpty, s"the restart emitted ${emitted.size} rows")
   }
 }
 

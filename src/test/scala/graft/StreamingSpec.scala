@@ -251,6 +251,30 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Map("click" -> 2L, "view" -> 1L))
   }
 
+  test("an AvailableNow run of windowedCounts emits the windows its watermark closed, under the stateful streaming settings") {
+    // the windows close in the no-data batch after the data batch, so
+    // this fails if the settings turn spark.sql.streaming.noDataMicroBatches.enabled off
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val rows = withStatefulStreamingSettings {
+      val input = MemoryStream[Event]
+      input.addData(Event(1, ts(100), 1, "click", 1.0), Event(2, ts(101), 2, "click", 2.0), Event(3, ts(104), 1, "view", 3.0))
+      input.addData(Event(9, ts(200), 3, "view", 1.0))
+      val q = StreamingOps
+        .windowedCounts(input.toDF(), "15 seconds", "5 seconds")
+        .writeStream
+        .format("memory")
+        .queryName("wc_available_now")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      spark.table("wc_available_now").collect().map(r => (r.getString(1), r.getLong(2))).toMap
+    }
+    // the watermark (200 - 5 = 195) closed [90, 105) and nothing later
+    assert(rows == Map("click" -> 2L, "view" -> 1L))
+  }
+
   test("streaming domain quota matches the batch c28 result (stream-batch parity)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
