@@ -217,7 +217,7 @@ object TextDedup {
         shingleIndexBuilt.add(dir): Unit
       }
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
   }
 
   /** The df-capped inverted index feeding [[c2NgramJaccardCapped]],
@@ -564,7 +564,7 @@ object TextDedup {
     * isolation (fresh read of a prebuilt index) and audit its plan.
     */
   def serveNearDupIndex(spark: SparkSession, sfDir: String, indexDir: String, every: Int): DataFrame = {
-    val index = spark.read.parquet(s"$indexDir/bands")
+    val index = Tables.parquet(spark, s"$indexDir/bands")
     // batch shingles computed ONCE (checkpoint) — they feed the band
     // keys AND the verification side
     val batchSh = shingleHashes(spark, sfDir).filter(col("doc_id") % every === 0).localCheckpoint()
@@ -579,7 +579,7 @@ object TextDedup {
     val cand = crossPairs.unionByName(batchPairs)
     // history shingles come FROM THE INDEX — the serve path never
     // re-shingles a history document
-    val verified = jaccardVerified(spark.read.parquet(s"$indexDir/sh").unionByName(batchSh), Some(cand))
+    val verified = jaccardVerified(Tables.parquet(spark, s"$indexDir/sh").unionByName(batchSh), Some(cand))
     c55NearDupIncrementalFrom(
       verified,
       Tables.documents(spark, sfDir).select(col("doc_id"), col("lang")),

@@ -40,7 +40,7 @@ object StreamingDemo {
     // GraftSession.streamingShufflePartitions). The demo's batch
     // parity reads run at this size too — at demo scale that is the
     // right size for them as well.
-    val replayRows = spark.read.parquet(s"$sfDir/events.parquet").count()
+    val replayRows = graft.sources.Tables.events(spark, sfDir).count()
     val streamParts = demoShufflePartitions(replayRows, spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", streamParts.toString)
 
@@ -167,7 +167,7 @@ object StreamingDemo {
     curation.awaitTermination()
     val nCurated = spark.table("demo_curation").count()
     val nCuratedBatch = graft.operators.Sampling
-      .curationRows(spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id"), col("text")))
+      .curationRows(graft.sources.Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
       .count()
     require(nCurated == nCuratedBatch, s"stream-batch curation divergence: $nCurated vs $nCuratedBatch")
 
@@ -464,7 +464,7 @@ object StreamingDemo {
       .start()
       .awaitTermination()
     val nUpsert = StreamingSink.upsertTable(spark, upsertTableDir).count()
-    val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val nDocs = graft.sources.Tables.documents(spark, sfDir).count()
     require(nUpsert == nDocs, s"upsert table lost rows: $nUpsert vs $nDocs")
 
     // exactly-once parquet sink for the deduped stream

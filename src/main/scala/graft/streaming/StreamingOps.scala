@@ -666,7 +666,7 @@ object StreamingOps {
     * batch pass.
     */
   def streamingIndexedAdmission(docs: Dataset[DocBands], indexDir: String): DataFrame = {
-    val index = docs.sparkSession.read.parquet(s"$indexDir/bands")
+    val index = graft.sources.Tables.parquet(docs.sparkSession, s"$indexDir/bands")
     graft.operators.TextDedup.indexCrossPairs(docs.toDF(), index)
   }
 
