@@ -625,8 +625,8 @@ object GraftSql {
     * (partkey, suppkey) exchange; the remaining distinct-aggregate
     * exchange carries map-side-deduped (brand, type, size, suppkey)
     * rows restricted to the ~16%-selective part filter — strictly
-    * fewer bytes at any scale. A/B at sf0.1 (R15Ab, 5-pass medians,
-    * same session): bridge form 1.110 s @32c / 0.868 s @8c vs
+    * fewer bytes at any scale. A/B at sf0.1 (OPTIMIZATION_r15.md §1,
+    * 5-pass medians, same session): bridge form 1.110 s @32c / 0.868 s @8c vs
     * join-first 0.649 s @32c / 0.512 s @8c — join-first kept. The
     * DuckDB oracle keeps running [[Q16Sql]]; the gate hash proves
     * equivalence.
@@ -872,47 +872,20 @@ object GraftSql {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY 1""".stripMargin
 
-  /** Engine-side form of [[MultiDistinctSql]] (round-14): same
-    * single-pass Expand plan, but the revenue term rides the gid=0
-    * branch as TWO long sums over the unscaled product instead of one
-    * decimal sum — a decimal(23,4) aggregation buffer in the 5-key
-    * Expand hash aggregate forces the non-vectorized BigDecimal update
-    * path for EVERY expanded row (4x the join output), measured 2.7 s
-    * vs 1.5 s for the identical aggregate with long-only buffers at
-    * sf0.1. Exactness: u = unscaled(price_dec18_2) x (100 −
+  /** The joined narrow frame feeding b46's split posture — year key,
+    * the three distinct-counted keys, and the unscaled money term. The
+    * revenue is carried as long sums over the unscaled product instead
+    * of one decimal sum: a decimal(23,4) aggregation buffer forces the
+    * non-vectorized BigDecimal update path for every row (round 14
+    * measured 2.7 s vs 1.5 s for the identical aggregate with long-only
+    * buffers at sf0.1). Exactness: u = unscaled(price_dec18_2) x (100 −
     * unscaled(disc_dec3_2)) IS price x (1−disc) at scale 4 as an
     * integer (u ≤ 1e10, non-negative by data contract); the hi/lo split
     * at 10^5 keeps both partial sums < 2^63 to ~9e13 rows per
     * order_year (far past 100 TB's ~4e11 lineitem rows); the final
     * reconstruction (hi*1e5 + lo)/1e4 runs once per group in decimal
     * and casts to double, which is the same correctly-rounded value the
-    * direct decimal sum produces. The DuckDB oracle keeps running
-    * [[MultiDistinctSql]]; the gate hash proves equivalence.
-    */
-  val MultiDistinctEngineSql: String =
-    """WITH j AS (
-      |  SELECT CAST(year(o_orderdate) AS BIGINT) AS order_year,
-      |    o_custkey, l_suppkey, l_partkey,
-      |    unscaled_long(CAST(l_extendedprice AS DECIMAL(18,2)))
-      |      * (100 - unscaled_long(CAST(l_discount AS DECIMAL(3,2)))) AS u
-      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      |a AS (
-      |  SELECT order_year,
-      |    COUNT(*) AS n_lines,
-      |    COUNT(DISTINCT o_custkey) AS n_customers,
-      |    COUNT(DISTINCT l_suppkey) AS n_suppliers,
-      |    COUNT(DISTINCT l_partkey) AS n_parts,
-      |    SUM(u DIV 100000) AS hi,
-      |    SUM(u % 100000) AS lo
-      |  FROM j GROUP BY 1)
-      |SELECT order_year, n_lines, n_customers, n_suppliers, n_parts,
-      |  CAST((CAST(hi AS DECIMAL(38,0)) * 100000 + lo) / 10000 AS DOUBLE) AS revenue
-      |FROM a""".stripMargin
-
-  /** The joined narrow frame feeding b46's split posture — year key,
-    * the three distinct-counted keys, and the unscaled money term
-    * (same `u` definition and overflow bounds as
-    * [[MultiDistinctEngineSql]]).
+    * direct decimal sum produces.
     */
   private val MultiDistinctBaseSql: String =
     """SELECT CAST(year(o_orderdate) AS BIGINT) AS order_year,
@@ -933,13 +906,13 @@ object GraftSql {
     * (year, key)), so the three exchanges together carry the DISTINCT
     * key sets — far below the Expand's 4× row stream wherever keys
     * repeat, which is exactly when multi-distinct is expensive. A/B at
-    * sf0.1 (R15Ab, 5-pass medians, same session): Expand 2.310 s @32c
-    * / 1.955 s @8c vs split 1.577 s @32c / 1.338 s @8c — split kept at
-    * both core counts. Exactness: COUNT(*)/SUM(hi)/SUM(lo) aggregate
+    * sf0.1 (OPTIMIZATION_r15.md §2, 5-pass medians, same session):
+    * Expand 2.310 s @32c / 1.955 s @8c vs split 1.577 s @32c /
+    * 1.338 s @8c — split kept at both core counts. Exactness: COUNT(*)/SUM(hi)/SUM(lo) aggregate
     * the identical checkpointed rows; COUNT(DISTINCT k) per year ≡
     * count of the deduped (year, k) set — definitionally equal; the
-    * revenue reconstruction is byte-for-byte
-    * [[MultiDistinctEngineSql]]'s. The DuckDB oracle keeps running
+    * revenue reconstruction is exact by [[MultiDistinctBaseSql]]'s
+    * argument. The DuckDB oracle keeps running
     * [[MultiDistinctSql]]; the gate hash proves equivalence.
     */
   def b46MultiDistinct(spark: SparkSession, sfDir: String): DataFrame = {

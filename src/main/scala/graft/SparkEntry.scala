@@ -87,10 +87,10 @@ object SparkEntry {
     "c17_dedup_embedding_lsh" -> ((s, d) => VectorOps.c17EmbeddingDedupLsh(s, d)),
     "c18_ann_ivf" -> ((s, d) => VectorOps.c18AnnIvf(s, d)),
     "c101_ann_imi" -> ((s, d) => VectorOps.c101AnnImi(s, d)),
-    "c35_semdedup" -> ((s, d) => VectorOps.c35SemDedup(s, d)),
+    "c35_semdedup" -> (VectorOps.c35SemDedup _),
     "c39_embedding_outliers" -> (VectorOps.c39EmbeddingOutliers _),
     "c24_ann_ivf_trained" -> ((s, d) => VectorOps.c24AnnIvfTrained(s, d)),
-    "c29_ann_pq" -> ((s, d) => VectorOps.c29AnnPq(s, d)),
+    "c29_ann_pq" -> (VectorOps.c29AnnPq _),
     "c19_stratified_sample" -> (Sampling.c19StratifiedSample _),
     "c36_temperature_mix" -> (Sampling.c36TemperatureMix _),
     "c37_importance_score" -> (TextAnalysis.c37ImportanceScore _),
@@ -99,15 +99,15 @@ object SparkEntry {
     "c41_heavy_hitters" -> (TextAnalysis.c41HeavyHitters _),
     "c42_epoch_mix" -> (Sampling.c42EpochMix _),
     "c43_chunk_dedup_rewrite" -> (TextAnalysis.c43ChunkDedupRewrite _),
-    "c44_bloom_dedup" -> ((s, d) => Sampling.c44BloomDedup(s, d)),
+    "c44_bloom_dedup" -> (Sampling.c44BloomDedup _),
     "c45_quality_canonical" -> (TextAnalysis.c45QualityCanonical _),
     "c46_weighted_sample" -> (Sampling.c46WeightedSample _),
     "c47_dup_spans" -> (TextAnalysis.c47DupSpans _),
     "c103_exactsubstr_spans" -> (TextAnalysis.c103ExactSubstrSpans _),
-    "c104_ann_ivfadc" -> ((s, d) => VectorOps.c104AnnIvfAdc(s, d)),
-    "c106_ann_imi_trained" -> ((s, d) => VectorOps.c106AnnImiTrained(s, d)),
+    "c104_ann_ivfadc" -> (VectorOps.c104AnnIvfAdc _),
+    "c106_ann_imi_trained" -> (VectorOps.c106AnnImiTrained _),
     "c107_trained_quality" -> (TextAnalysis.c107TrainedQuality _),
-    "c108_ann_imi_adc" -> ((s, d) => VectorOps.c108AnnImiAdc(s, d)),
+    "c108_ann_imi_adc" -> (VectorOps.c108AnnImiAdc _),
     "c109_unigram_train" -> (TextAnalysis.c109UnigramTrain _),
     "c110_image_dhash_wide" -> (Multimodal.c110ImageDhashWidePairs _),
     "c111_unigram_segment" -> (TextAnalysis.c111UnigramSegment _),
@@ -186,7 +186,7 @@ object SparkEntry {
     "b47_mode_native" -> (Relational.b47ModeNative _),
     "b48_ratio_to_report" -> (Relational.b48RatioToReport _),
     "s20_neardup_index" -> (TextDedup.s20NearDupIndex _),
-    "c73_split_leakage" -> ((s, d) => Sampling.c73SplitLeakage(s, d)),
+    "c73_split_leakage" -> (Sampling.c73SplitLeakage _),
     "s21_shallow_clone" -> (graft.sources.Formats.s21ShallowClone _),
     "b49_set_ops_all" -> (GraftSql.b49SetOpsAll _),
     "b50_dist_windows" -> (Relational.b50DistWindows _),

@@ -53,14 +53,7 @@ object Sampling {
       .filter(stratifiedKeep(col("doc_id"), col("lang")))
       .select(col("doc_id"), col("lang"), sampleBucket(col("doc_id")).as("bucket"))
 
-  /** c36 geometry: temperature T = 2 and a per-mille bucket space.
-    * T = 2 is deliberate: the keep-rate sqrt(n_min / n_l) needs only
-    * IEEE-correctly-rounded ops (divide, sqrt, multiply, floor), so
-    * Spark and DuckDB compute bit-identical thresholds — a general
-    * pow() would round differently between libm implementations and
-    * break the hash gate at ULP boundaries.
-    */
-  val MixTemperature = 2.0
+  /** c36 geometry: a per-mille bucket space. */
   val MixBucketSpace = 1000
 
   private def mixBucket(id: Column): Column =
@@ -73,7 +66,7 @@ object Sampling {
     * with keep-rate r_l = (n_min / n_l)^(1 - 1/T) — the largest rate
     * (the smallest language) is exactly 1, everything else downsamples
     * toward balance. Deterministic: the threshold floor(r_l · 1000) is
-    * integer math on correctly-rounded doubles (see [[MixTemperature]])
+    * integer math on correctly-rounded doubles (T = 2, see below)
     * and the per-document coin is the c19 salted-md5 bucket, so batch,
     * stream, and the DuckDB oracle agree row-for-row.
     *
@@ -92,9 +85,13 @@ object Sampling {
     // the threshold frame's left side: three corpus scans and two
     // broadcast-materialization jobs of fixed-overhead tax on a tiny
     // plan; this is the 2-job floor (histogram scan + filtered scan).
-    // Float math unchanged and engine-exact: JVM sqrt/division/multiply
-    // are the same correctly-rounded IEEE ops the Column expressions
-    // (and the DuckDB oracle) run, floor exact.
+    // Temperature T = 2, so the keep-rate is sqrt(n_min / n_l). T = 2
+    // is deliberate: it needs only IEEE-correctly-rounded ops (divide,
+    // sqrt, multiply, floor), so Spark and DuckDB compute bit-identical
+    // thresholds — a general pow() would round differently between libm
+    // implementations and break the hash gate at ULP boundaries. JVM
+    // sqrt/division/multiply are the same correctly-rounded IEEE ops the
+    // Column expressions (and the DuckDB oracle) run, floor exact.
     val countRows = docs.groupBy(col("lang")).agg(count(lit(1)).as("n")).collect()
     val nMin = countRows.map(_.getLong(1)).min
     val spark2 = docs.sparkSession
@@ -368,7 +365,7 @@ object Sampling {
   /** c46 geometry: weight tiers are powers of two ON PURPOSE — the
     * Efraimidis-Spirakis priority u^(1/w) is then a sqrt chain
     * (u, sqrt(u), sqrt(sqrt(u))), and sqrt is IEEE correctly-rounded
-    * in both engines (same reasoning as [[MixTemperature]]); a general
+    * in both engines (same reasoning as c36's T = 2); a general
     * pow() rounds differently across libm implementations and would
     * break the hash gate at ULP boundaries. Tier thresholds follow the
     * c9 score: clean docs weigh 4, mid-quality 2, the rest 1.
@@ -514,7 +511,7 @@ object Sampling {
     * `history.count()` here stands in for the snapshot row count a
     * production metastore already tracks.
     */
-  def c44BloomDedup(spark: SparkSession, sfDir: String, materializeOnce: Boolean = true): DataFrame = {
+  def c44BloomDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables
       .documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), md5(col("text")).as("h"))
@@ -526,9 +523,8 @@ object Sampling {
     // the checkpoint is one narrow hash column and none of the three
     // history jobs re-touch text bytes. Deterministic row-local hash —
     // no value changes.
-    val histRaw = docs.filter(!isNew).select(col("h"))
-    val hist = if (materializeOnce) histRaw.localCheckpoint() else histRaw
-    bloomAdmit(hist, docs.filter(isNew), materializeOnce)
+    val hist = docs.filter(!isNew).select(col("h")).localCheckpoint()
+    bloomAdmit(hist, docs.filter(isNew))
   }
 
   /** Generic core of [[c44BloomDedup]]: `history` is a 1-column frame
@@ -538,7 +534,7 @@ object Sampling {
     * plain anti-join, with only the batch canonicalization ever
     * shuffling.
     */
-  def bloomAdmit(history: DataFrame, batch: DataFrame, materializeOnce: Boolean = true): DataFrame = {
+  def bloomAdmit(history: DataFrame, batch: DataFrame): DataFrame = {
     val bloomBytes = history
       .agg(graft.plans.BloomAdmit.bloomAgg(xxhash64(col("h")), history.count(), BloomFpp).as("bf"))
       .head()
@@ -550,11 +546,11 @@ object Sampling {
     // batch scan + md5 + exchange each time. The batch is a daily
     // sliver by contract, so the checkpoint is small at any corpus
     // scale.
-    val canonicalRaw = batch
+    val canonical = batch
       .groupBy(col("h"))
       .agg(min(struct(col("doc_id"), col("lang"))).as("w"))
       .select(col("w.doc_id").as("doc_id"), col("w.lang").as("lang"), col("h"))
-    val canonical = if (materializeOnce) canonicalRaw.localCheckpoint() else canonicalRaw
+      .localCheckpoint()
     val maybeDup = graft.plans.BloomAdmit.mightContain(bloomBytes, xxhash64(col("h")))
     val definite = canonical.filter(!maybeDup)
     val candidates = canonical.filter(maybeDup)
@@ -1137,7 +1133,7 @@ object Sampling {
     * clean (all-zero report); the spec plants a cross-split near-dup
     * and proves the hit branch.
     */
-  def c73SplitLeakage(spark: SparkSession, sfDir: String, materializeOnce: Boolean = false): DataFrame = {
+  def c73SplitLeakage(spark: SparkSession, sfDir: String): DataFrame = {
     // round 15: a shingle-frame localCheckpoint (c21's posture) was
     // BUILT, MEASURED, AND REJECTED here — A/B medians 0.692 → 0.996 s
     // @32c and 0.680 → 0.805 s @8c. The reason it loses where c21's
@@ -1147,9 +1143,8 @@ object Sampling {
     // train branch its slice, ≈ one full shingle pass in total, while
     // the checkpoint forces a 100% materialization plus the write.
     // c21 differs because BOTH its branches are corpus-sized consumers
-    // of the SAME rows. Kept param so the A/B stays reproducible.
-    val shRaw = graft.operators.TextDedup.shingleHashes(spark, sfDir)
-    c73SplitLeakageFrom(if (materializeOnce) shRaw.localCheckpoint() else shRaw)
+    // of the SAME rows.
+    c73SplitLeakageFrom(graft.operators.TextDedup.shingleHashes(spark, sfDir))
   }
 
   /** The leakage report over any (doc_id, h) distinct-shingle frame —

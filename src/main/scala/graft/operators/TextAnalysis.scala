@@ -390,7 +390,6 @@ object TextAnalysis {
     * one row per chunk: (doc_id, chunk_md5, tok_len).
     */
   def cdcChunks(docs: DataFrame): DataFrame = {
-    import graft.functions.TextFunctions.hash32
     // STAGED projections, not one nested expression: each array column
     // (ht→rh, bpos, starts/ends) is referenced more than once
     // downstream, and a lambda body that embeds the upstream ARRAY
@@ -1809,24 +1808,15 @@ object TextAnalysis {
   val QcDim = 512
   val QcScale = 1000
 
-  /** The c79 per-token integer weight as a column expression: token →
-    * feature bucket (md5-derived hash mod [[QcDim]], the hashing
-    * trick) → the bucket's weight, itself md5-derived from the bucket
-    * id — a deterministic stand-in for a trained coefficient vector
-    * that DuckDB re-derives exactly. Swapping in real learned weights
-    * is a broadcast lookup over the same bucket column.
-    */
-  private def qcWeight(tok: Column): Column = {
-    val bucket = hash32(tok) % QcDim
-    hash32(concat(lit("qw#"), bucket.cast("string"))) % (2 * QcScale + 1) - QcScale
-  }
-
-  /** The md5-derived weight VECTOR behind [[qcWeight]], precomputed
-    * driver-side (round-14): weight(b) = md5prefix8("qw#b") %
-    * (2·QcScale+1) − QcScale — the identical arithmetic
-    * [[graft.plans.Md5PrefixLongExpr.prefixLong]] gives the engine, so
-    * serving through the dense vector is bit-equal to evaluating
-    * qcWeight per token. 512 longs, computed once per JVM.
+  /** The c79 per-bucket integer weights, precomputed driver-side
+    * (round-14): a token's feature bucket is its md5-derived hash mod
+    * [[QcDim]] (the hashing trick), and bucket b weighs
+    * md5prefix8("qw#b") % (2·QcScale+1) − QcScale — a deterministic
+    * stand-in for a trained coefficient vector that DuckDB re-derives
+    * exactly, with the identical arithmetic
+    * [[graft.plans.Md5PrefixLongExpr.prefixLong]] gives the engine.
+    * Swapping in real learned weights is a different vector over the
+    * same bucket column. 512 longs, computed once per JVM.
     */
   private lazy val qcWeightVector: Array[Long] =
     Array.tabulate(QcDim) { b =>

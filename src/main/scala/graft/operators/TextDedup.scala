@@ -54,13 +54,13 @@ object TextDedup {
     */
   val MaxShingleDf = 1000
 
-  /** SimHash: 60-bit signature, hamming threshold, 9 pigeonhole blocks
-    * (9 blocks ≥ threshold+1 ⇒ any pair within threshold shares a
-    * block, so blocked candidate generation is exhaustive).
+  /** SimHash: 60-bit signature and hamming threshold. c4 blocks the
+    * signature into 9 pigeonhole blocks (9 blocks ≥ threshold+1 ⇒ any
+    * pair within threshold shares a block, so blocked candidate
+    * generation is exhaustive).
     */
   val SimHashBits = 60
   val HammingMax = 8
-  val SimHashBlocks = 9
 
   /** doc_id + distinct 32-bit hashes of word-5-gram shingles — the
     * shared front end for the Jaccard/MinHash/fingerprint family.
@@ -804,30 +804,6 @@ object TextDedup {
     */
   val HotBucketFloor = 32
 
-  /** PROBE-ONLY LEGACY (rounds 10–11's adaptive threshold; the
-    * operator no longer reads it — see [[hotBucketT]]). Kept for the
-    * C93CostProbe/Hot2Probe diagnostics, which report how the old
-    * mean-multiple boundary would have classified a corpus next to
-    * the measured rule that replaced it.
-    */
-  val HotBucketMeanMultiple = 8
-
-  /** PROBE-ONLY LEGACY: the rounds-10–11 adaptive hot threshold
-    * (max(floor, 8 × mean bucket size), mean = ceil(nDocs / 4096)).
-    * Round 12 removed it from the operator: the LEVEL-1 decision is
-    * the per-bucket measured rule `refined_est + rekey < n²` and the
-    * LEVEL-2 decision is the per-SUB-bucket measured rule
-    * `16·sn + Σ subsub² < sn²` (both in [[refinePlan]]) — thresholds
-    * tuned on one geometry misfire on another (round 10's sf3
-    * regression), measured costs cannot. Only the cost-probe mains
-    * still call this, to print the legacy boundary for comparison.
-    */
-  def hotBucketT(nDocs: Long): Long =
-    math.max(
-      HotBucketFloor.toLong,
-      HotBucketMeanMultiple * ((nDocs + (1L << WideBlockBits) - 1) / (1L << WideBlockBits))
-    )
-
   /** Level-2 half-block width: the doubly-hot re-key slices the 8
     * remaining full blocks into 16 sub-keys of this many bits.
     */
@@ -993,7 +969,7 @@ object TextDedup {
     // floor re-applied as a predicate; bit-identical decision inputs)
     // — was implemented and MEASURED SLOWER: solo c93 at sf0.1 went
     // ~3.3 s → 6.42 s (5-pass median, 32c). The geometry explains it
-    // (RefinePlanProbe): warmMembers is ~102k rows but big sub-buckets
+    // (OPTIMIZATION_r15.md §8): warmMembers is ~102k rows but big sub-buckets
     // hold only a few thousand members, so the old level-2 census
     // explodes ~16× a FEW-THOUSAND-row slice while the fused form
     // explodes 16× EVERYTHING into a ~1.6M-row nearly-unique-key

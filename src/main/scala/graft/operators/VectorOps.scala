@@ -542,25 +542,15 @@ object VectorOps {
   }
 
   /** `(band_idx, bucket)` rows per vector: band j's bucket is the
-    * sign-pattern integer of planes [j·r, (j+1)·r). All sign bits come
-    * from ONE single-pass codegen'd projection
+    * sign-pattern integer of planes [j·r, (j+1)·r), read by shift-and-mask
+    * from a `bits` column that ALREADY carries the packed sign bits of
+    * ONE single-pass codegen'd projection
     * ([[graft.plans.HyperplaneSignBits]] — the vector is read once, not
-    * once per plane); per-band buckets are then just shift-and-mask on
-    * the packed long. Only the small (band_idx, bucket, vec_id) triple
+    * once per plane). Only the small (band_idx, bucket, vec_id) triple
     * is exploded — the 64-double vector never rides through the band
     * explosion or the candidate shuffle; verification joins it back by
-    * vec_id afterwards.
-    */
-  private def bandBuckets(e: DataFrame, bands: Int, planesPerBand: Int): DataFrame = {
-    val planes = hyperplanes(bands * planesPerBand, Dim)
-    val bits = graft.plans.HyperplaneSignBits.hyperplaneBits(col("vn"), planes)
-    bandBucketsFromBits(e.select(col("vec_id"), bits.as("bits")), bands, planesPerBand)
-  }
-
-  /** [[bandBuckets]] over a frame that ALREADY carries the packed sign
-    * bits in a `bits` column: the per-band bucket fan-out is pure
-    * shift-and-mask, so a caller that materializes (vec_id, vn, bits)
-    * once can explode BOTH self-join sides from the same blocks without
+    * vec_id afterwards. A caller that materializes (vec_id, vn, bits)
+    * once explodes BOTH self-join sides from the same blocks without
     * re-running the plane projection (c7/c17's round-15 posture).
     */
   private def bandBucketsFromBits(eb: DataFrame, bands: Int, planesPerBand: Int): DataFrame = {
@@ -610,8 +600,7 @@ object VectorOps {
       spark: SparkSession,
       sfDir: String,
       bands: Int = C17Bands,
-      planesPerBand: Int = C17PlanesPerBand,
-      materializeOnce: Boolean = true
+      planesPerBand: Int = C17PlanesPerBand
   ): DataFrame = {
     // (vec_id, vn, bits) materialized ONCE (round 15): the un-materialized
     // form scanned the corpus four times — normalize ×4 and the 32-plane
@@ -621,12 +610,11 @@ object VectorOps {
     // deterministic row-local function of the scan, so materializing
     // changes nothing the oracle can see.
     val planes = hyperplanes(bands * planesPerBand, Dim)
-    val ebRaw = vecs(spark, sfDir).select(
+    val eb = vecs(spark, sfDir).select(
       col("vec_id"),
       col("vn"),
       graft.plans.HyperplaneSignBits.hyperplaneBits(col("vn"), planes).as("bits")
-    )
-    val eb = if (materializeOnce) ebRaw.localCheckpoint() else ebRaw
+    ).localCheckpoint()
     val bb = bandBucketsFromBits(eb.select(col("vec_id"), col("bits")), bands, planesPerBand)
     val cand = bb
       .select(col("band_idx"), col("bucket"), col("vec_id").as("vec_a"), col("bits").as("bits_a"))
@@ -707,8 +695,7 @@ object VectorOps {
   def c96DedupEmbeddingIvf(
       spark: SparkSession,
       sfDir: String,
-      lists: Int = AutoLists,
-      materializeOnce: Boolean = true
+      lists: Int = AutoLists
   ): DataFrame = {
     val nLists = if (lists == AutoLists) scaledLists(embCount(spark, sfDir), C96Lists) else lists
     val e = vecs(spark, sfDir)
@@ -734,14 +721,13 @@ object VectorOps {
     // per row through the materialization costs more than the two
     // normalize re-runs it saves. Deterministic row-local columns, so
     // no value changes.
-    val asgSetsRaw = e
+    val asgSets = e
       .select(col("vec_id"), top2.as("p2"))
       .select(
         col("vec_id"),
         least(element_at(col("p2"), 1), element_at(col("p2"), 2)).as("l1"),
         greatest(element_at(col("p2"), 1), element_at(col("p2"), 2)).as("l2")
-      )
-    val asgSets = if (materializeOnce) asgSetsRaw.localCheckpoint() else asgSetsRaw
+      ).localCheckpoint()
     val asg = asgSets
       .select(col("vec_id"), col("l1"), col("l2"), explode(array(col("l1"), col("l2"))).as("list_id"))
     val a = asg.select(col("list_id"), col("vec_id").as("vec_a"), col("l1").as("l1a"), col("l2").as("l2a"))
@@ -1024,7 +1010,7 @@ object VectorOps {
     * composed with c101's cell algebra — identical float ops in
     * identical order.
     */
-  def c106AnnImiTrained(spark: SparkSession, sfDir: String, materializeOnce: Boolean = true): DataFrame = {
+  def c106AnnImiTrained(spark: SparkSession, sfDir: String): DataFrame = {
     val e = vecs(spark, sfDir)
     val hk = imiHalfK(embCount(spark, sfDir))
     val nProbes = math.max(ImiCellProbes, 4 * hk)
@@ -1034,10 +1020,10 @@ object VectorOps {
       .select(col("vec_id").as("query_id"), col("vn").as("qv"))
     // c29's round-15 materialize-once posture (cell-assign pass + exact
     // attach share one checkpointed (neighbor_id, vn)).
-    val candsRaw = e
+    val cands = e
       .filter(col("vec_id") >= NumQueryVecs)
       .select(col("vec_id").as("neighbor_id"), col("vn"))
-    val cands = if (materializeOnce) candsRaw.localCheckpoint() else candsRaw
+      .localCheckpoint()
     val centsA = centroidCache.getOrElseUpdate(spark.sparkContext, s"$sfDir|imiA|hk=$hk|iters=$C106Iters") {
       trainCentroids(cands.select(col("neighbor_id"), slice(col("vn"), 1, half).as("vn")), hk, C106Iters)
     }
@@ -1209,7 +1195,7 @@ object VectorOps {
     * end to end. Recall floor vs c104 at equal budget lives in
     * VectorRecallSpec.
     */
-  def c108AnnImiAdc(spark: SparkSession, sfDir: String, materializeOnce: Boolean = true): DataFrame = {
+  def c108AnnImiAdc(spark: SparkSession, sfDir: String): DataFrame = {
     val e = vecs(spark, sfDir)
     val hk = imiHalfK(embCount(spark, sfDir))
     val nProbes = math.max(ImiCellProbes, 4 * hk)
@@ -1219,10 +1205,10 @@ object VectorOps {
       .select(col("vec_id").as("query_id"), col("vn").as("qv"))
     // c29's round-15 materialize-once posture: encode pass + exact
     // re-rank attach share one checkpointed (neighbor_id, vn).
-    val candsRaw = e
+    val cands = e
       .filter(col("vec_id") >= NumQueryVecs)
       .select(col("vec_id").as("neighbor_id"), col("vn"))
-    val cands = if (materializeOnce) candsRaw.localCheckpoint() else candsRaw
+      .localCheckpoint()
     val centsA = centroidCache.getOrElseUpdate(spark.sparkContext, s"$sfDir|imiA|hk=$hk|iters=$C106Iters") {
       trainCentroids(cands.select(col("neighbor_id"), slice(col("vn"), 1, half).as("vn")), hk, C106Iters)
     }
@@ -1479,8 +1465,7 @@ object VectorOps {
       sfDir: String,
       k: Int = C24Lists,
       nprobe: Int = C24Probes,
-      iters: Int = C24Iters,
-      materializeOnce: Boolean = true
+      iters: Int = C24Iters
   ): DataFrame = {
     val e = vecs(spark, sfDir)
     val queries = e
@@ -1490,10 +1475,10 @@ object VectorOps {
     // corpus a THIRD time for the gate's recall-instrumentation exact
     // pass, so the shared checkpoint covers ivf assign + brute-force +
     // re-rank attach.
-    val candsRaw = e
+    val cands = e
       .filter(col("vec_id") >= NumQueryVecs)
       .select(col("vec_id").as("neighbor_id"), col("vn"))
-    val cands = if (materializeOnce) candsRaw.localCheckpoint() else candsRaw
+      .localCheckpoint()
     val cents = centroidCache.getOrElseUpdate(spark.sparkContext, s"$sfDir|k=$k|iters=$iters") {
       trainCentroids(cands, k, iters)
     }
@@ -1712,7 +1697,7 @@ object VectorOps {
     )
   }
 
-  def c29AnnPq(spark: SparkSession, sfDir: String, materializeOnce: Boolean = true): DataFrame = {
+  def c29AnnPq(spark: SparkSession, sfDir: String): DataFrame = {
     val e = vecs(spark, sfDir)
     val queries = e
       .filter(col("vec_id") < NumQueryVecs)
@@ -1721,10 +1706,10 @@ object VectorOps {
     // pass and the exact re-rank attach each re-scanned + re-normalized
     // the corpus; one checkpoint serves both (deterministic row-local
     // columns — no value changes).
-    val candsRaw = e
+    val cands = e
       .filter(col("vec_id") >= NumQueryVecs)
       .select(col("vec_id").as("neighbor_id"), col("vn"))
-    val cands = if (materializeOnce) candsRaw.localCheckpoint() else candsRaw
+      .localCheckpoint()
     annPq(cands, queries, pqCodebooks(e), PqReRank, 5)
   }
 
@@ -1851,17 +1836,17 @@ object VectorOps {
     * same shortlist. Recall floor vs the exact c6 baseline lives in
     * VectorRecallSpec.
     */
-  def c104AnnIvfAdc(spark: SparkSession, sfDir: String, materializeOnce: Boolean = true): DataFrame = {
+  def c104AnnIvfAdc(spark: SparkSession, sfDir: String): DataFrame = {
     val e = vecs(spark, sfDir)
     val queries = e
       .filter(col("vec_id") < NumQueryVecs)
       .select(col("vec_id").as("query_id"), col("vn").as("qv"))
     // c29's round-15 materialize-once posture: encode pass + exact
     // re-rank attach share one checkpointed (neighbor_id, vn).
-    val candsRaw = e
+    val cands = e
       .filter(col("vec_id") >= NumQueryVecs)
       .select(col("vec_id").as("neighbor_id"), col("vn"))
-    val cands = if (materializeOnce) candsRaw.localCheckpoint() else candsRaw
+      .localCheckpoint()
     val cents = centroidCache.getOrElseUpdate(spark.sparkContext, s"$sfDir|k=$C24Lists|iters=$C24Iters") {
       trainCentroids(cands, C24Lists, C24Iters)
     }
@@ -1919,7 +1904,7 @@ object VectorOps {
     * against the oracle's ROW_NUMBER form; then [[semDedupAssigned]].
     * One corpus scan for the assignment, one bucketed self-join.
     */
-  def c35SemDedup(spark: SparkSession, sfDir: String, materializeOnce: Boolean = true): DataFrame = {
+  def c35SemDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val e = vecs(spark, sfDir)
     // round-14: kernel assignment over the 25 driver-collected seed
     // centroids — the n×25 crossJoin and the per-vector argmax
@@ -1929,14 +1914,13 @@ object VectorOps {
     // consumers ([[semDedupAssigned]]'s two pair sides and the verdict
     // left join). Deterministic row-local columns, so the checkpoint
     // changes no value.
-    val asgRaw = e.select(
+    val asg = e.select(
       col("vec_id"),
       element_at(graft.plans.CentroidTopK.centroidTopK(col("vn"), semCentRows(spark, sfDir), 1), 1)
         .cast("bigint")
         .as("list_id"),
       col("vn")
-    )
-    val asg = if (materializeOnce) asgRaw.localCheckpoint() else asgRaw
+    ).localCheckpoint()
     semDedupAssigned(asg, SemDedupThreshold)
   }
 
@@ -2047,20 +2031,18 @@ object VectorOps {
       spark: SparkSession,
       sfDir: String,
       bands: Int = C7Bands,
-      planesPerBand: Int = C7PlanesPerBand,
-      materializeOnce: Boolean = true
+      planesPerBand: Int = C7PlanesPerBand
   ): DataFrame = {
     // c17's round-15 materialize-once posture: one (vec_id, vn, bits)
     // checkpoint serves the query-side and candidate-side band explodes
     // plus the query broadcast and the exact-cosine attach — the
     // 48-plane sign projection and the normalize run once, not 2×/4×.
     val planes = hyperplanes(bands * planesPerBand, Dim)
-    val ebRaw = vecs(spark, sfDir).select(
+    val e = vecs(spark, sfDir).select(
       col("vec_id"),
       col("vn"),
       graft.plans.HyperplaneSignBits.hyperplaneBits(col("vn"), planes).as("bits")
-    )
-    val e = if (materializeOnce) ebRaw.localCheckpoint() else ebRaw
+    ).localCheckpoint()
     val bb = bandBucketsFromBits(e.select(col("vec_id"), col("bits")), bands, planesPerBand)
     val qb = bb.filter(col("vec_id") < NumQueryVecs)
     val cb = bb.filter(col("vec_id") >= NumQueryVecs)
@@ -2583,7 +2565,8 @@ object VectorOps {
     // materialized before the cross fan-out (round 15, c5's note): an
     // un-materialized vn re-runs the normalize per PAIR inside the
     // fused nested-loop stage — c78 measured 2.6 s vs 0.33 s
-    // checkpointed (C78Probe); also deduplicates the src/tgt scans
+    // checkpointed (OPTIMIZATION_r15.md §11); also deduplicates the
+    // src/tgt scans
     val e = bitextVecs(spark, sfDir).localCheckpoint()
     val src = e.filter(col("label") < BitextSrcLabels).select(col("vec_id").as("src_id"), col("vn").as("sv"))
     val tgt = e.filter(col("label") >= BitextSrcLabels).select(col("vec_id").as("tgt_id"), col("vn").as("tv"))

@@ -78,7 +78,7 @@ object GraftExtensions {
         val c = arity("simhash_of_tokens", 2)(children)
         c(1) match {
           case Literal(v: Int, IntegerType) => SimHashOfTokens(c(0), v)
-          case other =>
+          case _ =>
             throw new org.apache.spark.sql.AnalysisException(
               errorClass = "NON_FOLDABLE_ARGUMENT",
               messageParameters = Map(

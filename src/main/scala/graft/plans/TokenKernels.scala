@@ -194,8 +194,8 @@ object TokenKernels {
       copy(child = newChild)
   }
 
-  def bucketWeightSum(w: Column, weights: Seq[Long]): Column =
-    shims.columnOf(BucketWeightSumExpr(shims.expressionOf(w), weights.toArray))
+  def bucketWeightSum(w: Column, weights: Array[Long]): Column =
+    shims.columnOf(BucketWeightSumExpr(shims.expressionOf(w), weights))
 
   // ------------------------------------------------------------------
   // array_position(zip_with(a, b, ===), true)  →  one loop

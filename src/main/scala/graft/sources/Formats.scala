@@ -785,12 +785,6 @@ object Formats {
     readManifestTable(spark, dir)
   }
 
-  /** The manifest table dir for [[s17ManifestAppend]]'s spec assertions
-    * (valid after the query has run in the same application).
-    */
-  def s17ManifestDir(spark: SparkSession, sfDir: String): String =
-    s"${scratch(spark, "manifest", sfDir)}/t"
-
   /** s16: every Nth JSONL line ships corrupted (truncated mid-object) —
     * the deterministic stand-in for the malformed-line rate every real
     * web-scale ingest has.

@@ -112,7 +112,7 @@ class ExpressionsSpec extends SparkSpec {
     import graft.plans.SimHashOfTokens
     GraftSql.register(spark, sf0001)
     val hs = Seq(5L, 5L, 9L, 123456789L)
-    val viaAgg = hs
+    hs
       .groupBy(identity).map { case (h, occ) => (h, occ.size.toLong) }.toSeq
       .toDF("h", "cnt")
       .createOrReplaceTempView("simhash_in")

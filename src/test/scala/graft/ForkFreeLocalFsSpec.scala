@@ -8,7 +8,7 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
@@ -29,7 +29,7 @@ class ForkFreeLocalFsSpec extends SparkSpec {
   /** Hadoop configuration for `file`: the graft settings' fork-free
     * implementations, or Hadoop's forking `LocalFileSystem` and `LocalFs`.
     */
-  private def conf(forkFree: Boolean, umask: String = "022"): Configuration = {
+  private def conf(forkFree: Boolean, umask: String): Configuration = {
     val c = new Configuration()
     c.set("fs.permissions.umask-mode", umask)
     if (forkFree) GraftSession.StatefulStreamingSettings.collect {

@@ -1200,7 +1200,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("b46 multi-distinct: split posture — no Expand, checkpointed join serves all four aggregates") {
-    // round 15 (r14-verdict A/B, R15Ab): the Expand multi-distinct lost
+    // round 15 (OPTIMIZATION_r15.md §2): the Expand multi-distinct lost
     // to the split posture at both 32 and 8 cores (2.31/1.96 s vs
     // 1.58/1.34 s at sf0.1), so b46 now materializes the narrow joined
     // frame once and runs per-distinct dedup aggregates over it —
@@ -1836,7 +1836,7 @@ class OperatorsSpec extends SparkSpec {
     } yield (qid, id) -> score).toMap
     val expectedTop = expected.keys
       .groupBy(_._1)
-      .flatMap { case (qid, ks) =>
+      .flatMap { case (_, ks) =>
         ks.toSeq
           .map(k => (k, expected(k)))
           .sortBy { case ((_, id), s) => (-s, id) }

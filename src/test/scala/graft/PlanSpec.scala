@@ -509,7 +509,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("TopKPerKey sortedFinal mode equals hash mode and plans the spillable key sort") {
-    import org.apache.spark.sql.functions._
     val sparkS = spark
     import sparkS.implicits._
     val rnd = new scala.util.Random(77)

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.{StreamingOps, StreamingSink}
+import graft.streaming.StreamingSink
 import graft.streaming.StreamingOps.Event
 
 /** The exactly-once sink across a real stop/restart: the second query

@@ -251,6 +251,71 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Map("click" -> 2L, "view" -> 1L))
   }
 
+  test("dropDuplicatesDedup emits an event redelivered inside the watermark once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    val input = MemoryStream[Event]
+    val q = StreamingOps
+      .dropDuplicatesDedup(input.toDS(), "10 seconds")
+      .writeStream
+      .format("memory")
+      .queryName("ddw_out")
+      .outputMode("append")
+      .start()
+    input.addData(Event(1, ts(100), 1, "click", 1.0), Event(2, ts(101), 2, "click", 2.0))
+    q.processAllAvailable()
+    // event 1 again: the watermark is 101 - 10 = 91, so its key is still held
+    input.addData(Event(1, ts(100), 1, "click", 1.0), Event(3, ts(103), 1, "view", 3.0))
+    q.processAllAvailable()
+    val ids = spark.table("ddw_out").as[Event].collect().map(_.event_id).sorted.toSeq
+    q.stop()
+    assert(ids == Seq(1L, 2L, 3L))
+  }
+
+  test("sessionCounts over an in-order replay of sf0.001 events equals the batch a6 sessions") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    val events = graft.sources.Tables
+      .events(spark, sf0001)
+      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+      .as[Event]
+      .collect()
+      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
+    val input = MemoryStream[Event]
+    val q = StreamingOps
+      .sessionCounts(input.toDF(), "30 minutes", "0 seconds")
+      .writeStream
+      .format("memory")
+      .queryName("sessions_out")
+      .outputMode("append")
+      .start()
+    events.grouped(100).foreach { chunk =>
+      input.addData(chunk.toSeq)
+      q.processAllAvailable()
+    }
+    // an event an hour past the last moves the watermark past every
+    // session's end, so the last sessions close too
+    input.addData(Event(-1, new Timestamp(events.last.ts.getTime + 3600 * 1000L), -1, "end", 0.0))
+    q.processAllAvailable()
+    val streamed = spark
+      .table("sessions_out")
+      .filter($"user_id" =!= -1)
+      .select($"user_id", $"session_start", $"n")
+      .as[(Long, Timestamp, Long)]
+      .collect()
+    q.stop()
+    val batch = graft.operators.EventStreamOps
+      .a6SessionWindow(spark, sf0001)
+      .select($"user_id", $"session_start", $"n_events")
+      .as[(Long, Timestamp, Long)]
+      .collect()
+    val (missing, extra) = (batch.toSet.diff(streamed.toSet), streamed.toSet.diff(batch.toSet))
+    assert(missing.isEmpty && extra.isEmpty, s"missing=${missing.take(5)} extra=${extra.take(5)}")
+    assert(streamed.length == batch.length)
+  }
+
   test("an AvailableNow run of windowedCounts emits the windows its watermark closed, under the stateful streaming settings") {
     // the windows close in the no-data batch after the data batch, so
     // this fails if the settings turn spark.sql.streaming.noDataMicroBatches.enabled off
