@@ -124,13 +124,9 @@ object StreamBench {
     // partitions follow per-batch volume, not cores (state-store
     // commits are per partition per batch — see GraftSession scaladoc;
     // the batch replay collect above already ran on the cores-sized
-    // default). Override with SPARK_GRAFT_STREAM_PARTITIONS to
-    // reproduce the 32-partition worst case BASELINE.md records.
+    // default)
     val rowsPerBatch = math.max(1, math.ceil(events.length.toDouble / nChunks).toLong)
-    val streamParts = sys.env
-      .get("SPARK_GRAFT_STREAM_PARTITIONS")
-      .map(_.toInt)
-      .getOrElse(GraftSession.streamingShufflePartitions(rowsPerBatch, cpus))
+    val streamParts = GraftSession.streamingShufflePartitions(rowsPerBatch, cpus)
     // the streaming-sized setting is scoped to this bench: restore the
     // caller's value afterwards, or a batch query run later on the
     // shared session would silently inherit a 2-partition shuffle
@@ -205,21 +201,17 @@ object StreamBench {
         )
       }
 
-      // 4. Processor-API composite-key topology (attribution rekey →
-      // (user, pv) join + dedup — the reference's PvKey/EvPvKey stores)
+      // 4. Processor-API composite-key topology (attribution, then the
+      // (user, pv) join + dedup — the reference's PvKey/EvPvKey stores —
+      // in one user-keyed operator)
       locally {
         val in = MemoryStream[Event]
-        // wrap the FULL drive (start + every processAllAvailable), not
-        // just start(): the chained-stateful correctness check runs
-        // lazily on the stream thread and races a start-scoped wrapper
-        results += ProcessorApiJoin.withChainedStatefulAllowed(spark) {
-          drive(
-            "processor_api_join",
-            eventChunks,
-            in,
-            () => noopSink(ProcessorApiJoin(in.toDS(), joinWindowSec = 600, dedupWindowSec = 60).toDF())
-          )
-        }
+        results += drive(
+          "processor_api_join",
+          eventChunks,
+          in,
+          () => noopSink(ProcessorApiJoin(in.toDS(), joinWindowSec = 600, dedupWindowSec = 60).toDF())
+        )
       }
 
     } finally {

@@ -27,12 +27,6 @@ object TextFunctions {
   def hash32(c: Column): Column =
     graft.plans.Md5PrefixLongExpr.md5PrefixLong(c, 8)
 
-  /** 60-bit hash (15 hex digits of md5) — fits a signed long, used for
-    * SimHash bit sampling. Native kernel, see [[hash32]].
-    */
-  def hash60(c: Column): Column =
-    graft.plans.Md5PrefixLongExpr.md5PrefixLong(c, 15)
-
   /** Rolling-hash constants for n-gram shingle hashing: base K small
     * enough that K^4 * h32 stays far inside a signed long.
     */
@@ -80,7 +74,7 @@ object TextFunctions {
   /** Per-token md5-prefix hashes of a string array in ONE native pass —
     * the kernel form of `transform(arr, t => hashN(salt ++ t) % mod)`
     * (round-14; transform lambdas are CodegenFallback — interpreted per
-    * element). hexDigits 8 ≡ [[hash32]], 15 ≡ [[hash60]]; salt ""
+    * element). hexDigits 8 ≡ [[hash32]]; salt ""
     * and mod 0 mean none.
     */
   def md5Tokens(arr: Column, hexDigits: Int, salt: String = "", mod: Long = 0L): Column =

@@ -412,7 +412,7 @@ object Sampling {
 
   /** [[weightedPriorities]] as a df→df transform over any frame with
     * (doc_id, lang, text) — pure row-local column math, so it applies
-    * verbatim to a stream (StreamingDemo's reservoir leg).
+    * verbatim to a stream (StreamingSpec's weighted-sample parity).
     */
   def weightedPrioritiesFrom(docs: DataFrame): DataFrame =
     TextAnalysis

@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * calls this once per token occurrence). One thread-local
   * MessageDigest, one nibble loop, zero allocations beyond the digest.
   *
-  * `hexDigits` ≤ 15 so the value fits a signed long (the house hashes:
-  * 8 → hash32, 15 → hash60).
+  * `hexDigits` ≤ 15 so the value fits a signed long (the house hash,
+  * `hash32`, takes 8).
   */
 case class Md5PrefixLongExpr(child: Expression, hexDigits: Int) extends UnaryExpression {
 

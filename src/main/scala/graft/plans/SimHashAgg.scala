@@ -2,11 +2,9 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native Catalyst aggregate: SimHash bit votes in one pass.
@@ -86,13 +84,4 @@ case class SimHashAgg(
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): SimHashAgg =
     copy(hash = newChildren(0), cnt = newChildren(1))
-}
-
-object SimHashAgg {
-
-  /** Column-level entry point: `simHash(hashCol, cntCol, bits)`. */
-  def simHash(hash: Column, cnt: Column, bits: Int): Column =
-    shims.columnOf(
-      SimHashAgg(shims.expressionOf(hash), shims.expressionOf(cnt), bits).toAggregateExpression()
-    )
 }

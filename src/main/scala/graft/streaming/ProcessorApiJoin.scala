@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.streaming.StreamingOps.Event
@@ -153,16 +154,18 @@ object ProcessorApiJoin {
   // repartition topic); :339-341 the Processor variant re-keys the same
   // way before EvJoinProcessor. The dedup store is keyed EvPvKey
   // (clientId, pvId, evId). Here:
-  //   stage 1 (attribute)   = the selectKey analogue: a per-user state
+  //   [[attribute]]   = the selectKey analogue: a per-user state
   //     machine stamps each click with its pv_id by last-view
   //     attribution (what the reference's client-side tracker does when
   //     it writes Ev.pvId);
-  //   stage 2 (joinAdvance) = flatMapGroupsWithState KEYED BY the
-  //     composite PvKey(user_id, pv_id): state holds the page view for
-  //     that pv plus the per-(user, pv, ev) dedup store, exactly the
-  //     PvWindowProcessor + EvJoinProcessor store pair.
-  // Both stages are append-mode flatMapGroupsWithState (Spark supports
-  // chaining those); the shuffle between them IS the repartition topic.
+  //   [[joinAdvance]] = the EvJoinProcessor against one composite
+  //     PvKey(user_id, pv_id): the page view for that pv plus the
+  //     per-(user, pv, ev) dedup store, exactly the PvWindowProcessor +
+  //     EvJoinProcessor store pair.
+  // Both run in ONE flatMapGroupsWithState keyed by user_id: the
+  // composite key only refines user_id, so every (user, pv) store nests
+  // inside its user's state and the re-key needs no repartition of its
+  // own — the one shuffle into the user-keyed operator carries both.
   // --------------------------------------------------------------------
 
   /** The reference's composite key (PvKey): pv_id = -1 marks a click
@@ -170,18 +173,18 @@ object ProcessorApiJoin {
     */
   case class PvKey(user_id: Long, pv_id: Long)
 
-  /** A re-keyed event: views carry their own event_id as pv_id. */
+  /** An attributed event: views carry their own event_id as pv_id. */
   case class Attributed(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, pv_id: Long)
 
-  /** Stage-1 state: recent views (event_id, ts-millis) per user. */
+  /** The attribution store: recent views (event_id, ts-millis) per user. */
   case class AttributionState(views: List[(Long, Long)], maxTs: Long)
 
-  /** Stage-2 state per composite key: the page view (if it arrived) and
+  /** The store of one composite key: the page view (if it arrived) and
     * the EvPvKey dedup store (click event_id → ts-millis).
     */
   case class PvJoinState(viewTs: Long, viewSeen: Boolean, seenClicks: Map[Long, Long], maxTs: Long)
 
-  /** Stage 1 as a pure function: stamp each event with its pv_id.
+  /** Attribution as a pure function: stamp each event with its pv_id.
     * Views attribute to themselves; a click attributes to the latest
     * view at-or-before it — "latest" in (ts, event_id) order, the same
     * tie rule as the batch attribution window in
@@ -190,8 +193,8 @@ object ProcessorApiJoin {
     *
     * Retention: views below `horizon − lookbackMs` are pruned after the
     * batch — a click admitted later (ts ≥ watermark) that would have
-    * attributed to a pruned view is necessarily outside stage 2's join
-    * window too (lookbackMs = the join window), so it emits the same
+    * attributed to a pruned view is necessarily outside [[joinAdvance]]'s
+    * join window too (lookbackMs = the join window), so it emits the same
     * None either way and the output is invariant to the pruning.
     */
   def attribute(
@@ -225,7 +228,7 @@ object ProcessorApiJoin {
     (AttributionState(views.filter(_._2 >= horizon), maxTs), out.result())
   }
 
-  /** Stage 2 as a pure function: the EvJoinProcessor against one
+  /** The join step as a pure function: the EvJoinProcessor against one
     * composite key. The page view for this pv is stored when it arrives
     * (PvWindowProcessor.process); each click is deduped by event_id
     * within the dedup window against the per-(user, pv, ev) store
@@ -276,59 +279,38 @@ object ProcessorApiJoin {
     (st, out.result())
   }
 
-  private val CheckCorrectnessKey =
-    "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-
-  /** Runs `body` — which must include STARTING any query over the
-    * composite topology — with Spark's chained-stateful-operator guard
-    * disabled, then restores the previous setting.
+  /** The composite-key topology: last-view attribution, then the
+    * windowed join + dedup per (user_id, pv_id) — the reference's exact
+    * key structure (PvKey / EvPvKey stores) — as one
+    * `flatMapGroupsWithState` keyed by user_id, which Spark runs under
+    * its default stateful-operator checks. Each user's state is its
+    * [[AttributionState]] and a [[PvJoinState]] per pv_id, kept as
+    * bytes ([[StateBytes]]); each batch runs [[attribute]] over the
+    * user's rows, then [[joinAdvance]] over the rows of each pv_id.
     *
-    * Spark statically rejects chained stateful operators because a
-    * flatMapGroupsWithState MAY emit rows below the global watermark,
-    * which the next stateful operator would silently drop as late.
-    * Stage 1 of [[apply]] cannot: it emits each admitted input row
-    * exactly once with its ORIGINAL event timestamp (ts ≥ watermark, or
-    * the row would not have been admitted), so every stage-1 output
-    * survives stage 2's late filter under the same per-batch global
-    * watermark — asserted by the stream-batch parity spec. The
-    * reference has no such cross-stage guarantee to lose (a Kafka
-    * Streams repartition topic carries no watermark at all).
+    * Only views and clicks enter the operator, so they alone set the
+    * watermark: a purchase later in event time than every click does
+    * not make the next clicks late. Other event types therefore move
+    * neither the attribution store's maxTs nor its pruning, which the
+    * two chained operators this replaced let them do; that can change
+    * whether a click redelivered after its first copy was attributed to
+    * a view outside its join window is emitted again.
     *
-    * The guard is session-wide, so the relaxation is scoped here
-    * instead of being set-and-forgotten in [[apply]]: unrelated
-    * streaming queries on the same session keep the safety check. The
-    * check runs during `.start()`'s analysis, and a started query
-    * executes on a cloned session whose conf was captured at start, so
-    * restoring on exit never disturbs a running query.
-    */
-  /** CALLER CONTRACT (round 13, measured): `body` must span the
-    * query's FULL lifecycle — through awaitTermination /
-    * processAllAvailable — not just `.start()`. The chained-stateful
-    * correctness check runs LAZILY on the stream-execution thread
-    * (MicroBatchExecution analyzes its logical plan there), so a
-    * wrapper that restores the conf as soon as start() returns races
-    * the check; StreamingDemo lost that race reproducibly while the
-    * specs (which processAllAvailable inside the block) never did.
-    */
-  def withChainedStatefulAllowed[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.getOption(CheckCorrectnessKey)
-    spark.conf.set(CheckCorrectnessKey, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(CheckCorrectnessKey, v)
-      case None => spark.conf.unset(CheckCorrectnessKey)
-    }
-  }
-
-  /** The composite-key topology: selectKey-style attribution shuffle,
-    * then the windowed join + dedup keyed by (user_id, pv_id) — the
-    * reference's exact key structure (PvKey / EvPvKey stores). Start
-    * queries over it inside [[withChainedStatefulAllowed]]. Spec:
-    * ProcessorApiJoinSpec (scenario + redelivery) and stream-batch
-    * parity with a11's oracle-gated semantics. Both stages keep their
-    * state ([[AttributionState]], [[PvJoinState]]) as bytes
-    * ([[StateBytes]]); a checkpoint that stored it as a struct cannot be
-    * resumed.
+    * Each store is reset to empty once the watermark passes its deadline
+    * — the attribution store's maxTs + 2·join, a pv's maxTs +
+    * 2·max(join, dedup) — and the user's timeout is the earliest pending
+    * one, so each store expires in the batch where its own timeout fired
+    * in the chained form, whatever else the user holds. Expiry emits nothing; it decides whether a later click finds
+    * an old view to attribute to, and so in which pv's dedup store it
+    * lands.
+    *
+    * Spec: ProcessorApiJoinSpec (scenario, redelivery, stream-batch
+    * parity with a11's oracle-gated semantics, and the same output as
+    * the two chained operators this replaced). A checkpoint written by
+    * those two operators is refused on restart with
+    * `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA` and emits
+    * nothing; one that stored the state as a struct cannot be resumed
+    * either.
     */
   def apply(
       events: Dataset[Event],
@@ -339,46 +321,36 @@ object ProcessorApiJoin {
     import events.sparkSession.implicits._
     val joinMs = joinWindowSec * 1000
     val dedupMs = dedupWindowSec * 1000
-    val attributionCodec = StateBytes[AttributionState]
-    val joinCodec = StateBytes[PvJoinState]
+    val codec = StateBytes[(AttributionState, Map[Long, PvJoinState])]
+    val noViews = AttributionState(Nil, 0L)
+    val noPv = PvJoinState(0L, viewSeen = false, Map.empty, 0L)
+    def attributionDeadline(a: AttributionState) = a.maxTs + 2 * joinMs
+    def pvDeadline(p: PvJoinState) = p.maxTs + 2 * math.max(joinMs, dedupMs)
 
-    val rekeyed: Dataset[Attributed] = events
+    events
+      .filter(col("event_type").isin("view", "click"))
       .withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Array[Byte], Attributed](
-        OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout
-      ) { (_: Long, rows: Iterator[Event], state: GroupState[Array[Byte]]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val st0 = state.getOption.map(attributionCodec.decode).getOrElse(AttributionState(Nil, 0L))
-          val (st, out) = attribute(st0, rows.toSeq, joinMs, state.getCurrentWatermarkMs())
-          state.update(attributionCodec.encode(st))
-          state.setTimeoutTimestamp(st.maxTs + 2 * joinMs)
-          out.iterator
-        }
-      }
-
-    rekeyed
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(a => PvKey(a.user_id, a.pv_id))
       .flatMapGroupsWithState[Array[Byte], EnrichedClick](
         OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout
-      ) { (key: PvKey, rows: Iterator[Attributed], state: GroupState[Array[Byte]]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val st0 = state.getOption.map(joinCodec.decode).getOrElse(PvJoinState(0L, viewSeen = false, Map.empty, 0L))
-          val (st, out) =
-            joinAdvance(key, st0, rows.toSeq, joinMs, dedupMs, state.getCurrentWatermarkMs())
-          state.update(joinCodec.encode(st))
-          state.setTimeoutTimestamp(st.maxTs + 2 * math.max(joinMs, dedupMs))
-          out.iterator
+      ) { (user: Long, rows: Iterator[Event], state: GroupState[Array[Byte]]) =>
+        val watermarkMs = state.getCurrentWatermarkMs()
+        val (attribution0, pvs0) = state.getOption.map(codec.decode).getOrElse((noViews, Map.empty[Long, PvJoinState]))
+        val (attribution, attributed) =
+          if (state.hasTimedOut) (attribution0, Nil) else attribute(attribution0, rows.toSeq, joinMs, watermarkMs)
+        val joined = attributed.groupBy(_.pv_id).map { case (pv, batch) =>
+          pv -> joinAdvance(PvKey(user, pv), pvs0.getOrElse(pv, noPv), batch, joinMs, dedupMs, watermarkMs)
         }
+        val liveAttribution = Some(attribution).filter(a => a != noViews && attributionDeadline(a) >= watermarkMs)
+        val pvs = (pvs0 ++ joined.map { case (pv, (st, _)) => pv -> st }).filter { case (_, p) => pvDeadline(p) >= watermarkMs }
+        val deadlines = liveAttribution.map(attributionDeadline) ++ pvs.values.map(pvDeadline)
+        if (deadlines.isEmpty) state.remove()
+        else {
+          state.update(codec.encode((liveAttribution.getOrElse(noViews), pvs)))
+          state.setTimeoutTimestamp(deadlines.min)
+        }
+        joined.valuesIterator.flatMap(_._2)
       }
   }
 }

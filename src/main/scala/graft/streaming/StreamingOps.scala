@@ -51,9 +51,9 @@ object StreamingOps {
     * ([[graft.operators.EventStreamOps.a1DedupWindowed]]) has no
     * arrival order at all and always keeps the event-time minimum; the
     * two agree exactly when records arrive in event-time order (the
-    * replay case StreamingDemo verifies), and differ only for
-    * out-of-order arrivals across micro-batches — where the reference
-    * itself is arrival-dependent.
+    * replay case StreamingSpec's stream-batch dedup parity verifies),
+    * and differ only for out-of-order arrivals across micro-batches —
+    * where the reference itself is arrival-dependent.
     */
   def firstWinsDedup(
       events: Dataset[Event],

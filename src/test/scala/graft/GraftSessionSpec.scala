@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.GraftSession
-import graft.streaming.StreamingOps
+import graft.streaming.{ProcessorApiJoin, StreamingOps}
 import graft.streaming.StreamingOps.Event
 
 /** The stateful-streaming settings of [[GraftSession]]: a reused session
@@ -157,6 +157,13 @@ class GraftSessionSpec extends SparkSpec {
     val out = checkRestarts(joinChunks, join)
     assert(out.exists(_.endsWith(",null,null,null]")), "no unmatched click was emitted")
     assert(out.exists(!_.endsWith(",null,null,null]")), "no click matched a view")
+  }
+
+  test("ProcessorApiJoin gives the same output when stopped and restarted at every batch boundary") {
+    import spark.implicits._
+    val out = checkRestarts(dedupChunks, (ds: Dataset[Event]) => ProcessorApiJoin(ds, joinWindowSec = 600, dedupWindowSec = 60).toDF())
+    assert(out.exists(_.endsWith(",null,null]")), "no unmatched click was emitted")
+    assert(out.exists(!_.endsWith(",null,null]")), "no click matched a view")
   }
 
   /** Writes the first half of the checkpoint with changelog

@@ -1,13 +1,18 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.collection.mutable
+import scala.util.Random
+
 import org.apache.spark.sql.{Dataset, functions => F}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException}
 
 import graft.sources.Tables
-import graft.streaming.ProcessorApiJoin
+import graft.streaming.{ProcessorApiJoin, StateBytes}
 import graft.streaming.ProcessorApiJoin.EnrichedClick
 import graft.streaming.StreamingOps.Event
 
@@ -17,8 +22,10 @@ import graft.streaming.StreamingOps.Event
   * the composite-key (user_id, pv_id) topology matching the
   * reference's PvKey/EvPvKey store structure — plus stream-batch
   * parity of the composite topology against a11's attribution + join
-  * semantics on the sf0.001 events table, and an at-least-once
-  * redelivery case across micro-batches.
+  * semantics on the sf0.001 events table, an at-least-once redelivery
+  * case across micro-batches, and the same output as the two chained
+  * operators the composite topology once ran as, kept here as the
+  * reference — whose checkpoint it refuses.
   */
 class ProcessorApiJoinSpec extends SparkSpec {
 
@@ -29,14 +36,12 @@ class ProcessorApiJoinSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     val input = MemoryStream[Event]
-    val q = ProcessorApiJoin.withChainedStatefulAllowed(spark) {
-      topology(input.toDS())
-        .writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    }
+    val q = topology(input.toDS())
+      .writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode("append")
+      .start()
 
     input.addData(
       // main page view (sendPv pv1)
@@ -83,38 +88,6 @@ class ProcessorApiJoinSpec extends SparkSpec {
     assertScenario(runScenario(ProcessorApiJoin(_, joinWindowSec = 15, dedupWindowSec = 5), "papi_out"))
   }
 
-  test("chained-stateful relaxation is scoped to the start block, not the session") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "true") // make the session guard explicit
-    try {
-      val input = MemoryStream[Event]
-      val q = ProcessorApiJoin.withChainedStatefulAllowed(spark) {
-        // the guard must read false inside the scope (start-time check)
-        assert(spark.conf.get(key) == "false")
-        ProcessorApiJoin(input.toDS())
-          .writeStream
-          .format("memory")
-          .queryName("papi_scoped")
-          .outputMode("append")
-          .start()
-      }
-      // ... and be restored the moment start() returns, while the
-      // already-started query keeps running on its cloned session
-      assert(spark.conf.get(key) == "true")
-      input.addData(Event(100, ts(100), 1, "view", 0), Event(101, ts(101), 1, "click", 0))
-      q.processAllAvailable()
-      assert(spark.table("papi_scoped").count() == 1)
-      q.stop()
-      assert(spark.conf.get(key) == "true")
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("reference clickstream scenario: user-keyed topology") {
     assertScenario(runScenario(ProcessorApiJoin.userKeyed(_, joinWindowSec = 15, dedupWindowSec = 5), "papi_user_out"))
   }
@@ -141,14 +114,12 @@ class ProcessorApiJoinSpec extends SparkSpec {
       .sortBy(e => (e.ts.getTime, e.event_id))
 
     val input = MemoryStream[Event]
-    val q = ProcessorApiJoin.withChainedStatefulAllowed(spark) {
-      ProcessorApiJoin(input.toDS(), joinWindowSec = joinSec, dedupWindowSec = 60, watermarkDelay = "1 hour")
-        .writeStream
-        .format("memory")
-        .queryName("papi_parity")
-        .outputMode("append")
-        .start()
-    }
+    val q = ProcessorApiJoin(input.toDS(), joinWindowSec = joinSec, dedupWindowSec = 60, watermarkDelay = "1 hour")
+      .writeStream
+      .format("memory")
+      .queryName("papi_parity")
+      .outputMode("append")
+      .start()
     all.grouped(200).foreach { chunk =>
       input.addData(chunk.toSeq)
       q.processAllAvailable()
@@ -194,14 +165,12 @@ class ProcessorApiJoinSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
 
     val input = MemoryStream[Event]
-    val q = ProcessorApiJoin.withChainedStatefulAllowed(spark) {
-      ProcessorApiJoin(input.toDS(), joinWindowSec = 15, dedupWindowSec = 30)
-        .writeStream
-        .format("memory")
-        .queryName("papi_redeliver")
-        .outputMode("append")
-        .start()
-    }
+    val q = ProcessorApiJoin(input.toDS(), joinWindowSec = 15, dedupWindowSec = 30)
+      .writeStream
+      .format("memory")
+      .queryName("papi_redeliver")
+      .outputMode("append")
+      .start()
     input.addData(Event(100, ts(100), 1, "view", 0), Event(101, ts(110), 1, "click", 0))
     q.processAllAvailable()
     // at-least-once: both the view and the click are redelivered in a
@@ -218,6 +187,211 @@ class ProcessorApiJoinSpec extends SparkSpec {
     val byId = rows.map(r => r.click_id -> r.view_id).toMap
     assert(byId(101L).contains(100L))
     assert(byId(102L).contains(100L))
+  }
+
+  // --- the composite topology against the two chained operators it once
+  // ran as: attribution keyed by user_id, then the join + dedup re-keyed
+  // by (user_id, pv_id), the watermark applied again in between
+
+  /** The chained form, as it ran before the topology was one operator.
+    * Spark refuses a chain of flatMapGroupsWithState operators unless
+    * its stateful-operator correctness check is off, so a query over it
+    * runs inside [[withChainCheckOff]].
+    */
+  private def chainedApply(joinWindowSec: Long, dedupWindowSec: Long, watermarkDelay: String)(
+      events: Dataset[Event]
+  ): Dataset[EnrichedClick] = {
+    import spark.implicits._
+    import ProcessorApiJoin._
+    val joinMs = joinWindowSec * 1000
+    val dedupMs = dedupWindowSec * 1000
+    val attributionCodec = StateBytes[AttributionState]
+    val joinCodec = StateBytes[PvJoinState]
+    events
+      .withWatermark("ts", watermarkDelay)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[Array[Byte], Attributed](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (_: Long, rows: Iterator[Event], state: GroupState[Array[Byte]]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val st0 = state.getOption.map(attributionCodec.decode).getOrElse(AttributionState(Nil, 0L))
+            val (st, out) = attribute(st0, rows.toSeq, joinMs, state.getCurrentWatermarkMs())
+            state.update(attributionCodec.encode(st))
+            state.setTimeoutTimestamp(st.maxTs + 2 * joinMs)
+            out.iterator
+          }
+      }
+      .withWatermark("ts", watermarkDelay)
+      .groupByKey(a => PvKey(a.user_id, a.pv_id))
+      .flatMapGroupsWithState[Array[Byte], EnrichedClick](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (key: PvKey, rows: Iterator[Attributed], state: GroupState[Array[Byte]]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val st0 = state.getOption.map(joinCodec.decode).getOrElse(PvJoinState(0L, viewSeen = false, Map.empty, 0L))
+            val (st, out) = joinAdvance(key, st0, rows.toSeq, joinMs, dedupMs, state.getCurrentWatermarkMs())
+            state.update(joinCodec.encode(st))
+            state.setTimeoutTimestamp(st.maxTs + 2 * math.max(joinMs, dedupMs))
+            out.iterator
+          }
+      }
+  }
+
+  /** Runs `body`, which must span a [[chainedApply]] query from start to
+    * stop (Spark checks the chain on the stream thread, not at start),
+    * with the chained-operator check off.
+    */
+  private def withChainCheckOff[T](body: => T): T = {
+    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private case class Run(rows: Seq[String], dropped: Long, plan: Seq[String])
+
+  private var queries = 0
+
+  /** Runs `topology` over `batches`, one append and
+    * `processAllAvailable` each, into a memory sink; `checkpoint` is
+    * reused across runs when given.
+    */
+  private def drive(
+      topology: Dataset[Event] => Dataset[EnrichedClick],
+      batches: Seq[Seq[Event]],
+      input: MemoryStream[Event] = null,
+      checkpoint: String = null
+  ): Run = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = Option(input).getOrElse(MemoryStream[Event])
+    queries += 1
+    val name = s"papi_drive_$queries"
+    val writer = topology(in.toDS()).writeStream.format("memory").queryName(name).outputMode("append")
+    val q = Option(checkpoint).fold(writer)(writer.option("checkpointLocation", _)).start()
+    try {
+      batches.foreach { b =>
+        in.addData(b)
+        q.processAllAvailable()
+      }
+      Run(
+        spark.table(name).as[EnrichedClick].collect().map(_.toString).toSeq.sorted,
+        q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum,
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.collect { case p => p.getClass.getSimpleName }
+      )
+    } finally q.stop()
+  }
+
+  private val T0 = 1700000000L
+
+  private def at(sec: Double): Timestamp = new Timestamp(((T0 + sec) * 1000).toLong)
+
+  /** Eight seeded micro-batches 30 s of event time apart, then one far
+    * in the future that expires every store. Each holds, over four
+    * users:
+    *   - a purchase 5 s after the batch's time, the batch's max event time;
+    *   - views and clicks up to 40 s old, so out of order across batches;
+    *   - a purchase alone for some users, for others none;
+    *   - a click 90 s old, behind the watermark once it has moved;
+    *   - redelivered copies of earlier views and clicks.
+    */
+  private def seededBatches(seed: Long): Seq[Seq[Event]] = {
+    val rnd = new Random(seed)
+    var id = 0L
+    val seen = mutable.ArrayBuffer.empty[Event]
+    def event(user: Long, sec: Double, kind: String): Event = {
+      id += 1
+      Event(id, at(sec), user, kind, 0.0)
+    }
+    val live = (0 until 8).map { b =>
+      val now = 100 + 30 * b
+      val out = mutable.ArrayBuffer(event(rnd.nextInt(4).toLong, now + 5, "purchase"))
+      for (user <- 0L until 4L) {
+        if (rnd.nextInt(3) == 0) out += event(user, now - rnd.nextInt(40000) / 1000.0, "purchase")
+        if (rnd.nextBoolean())
+          for (_ <- 0 until 1 + rnd.nextInt(4))
+            out += event(user, now - rnd.nextInt(40000) / 1000.0, if (rnd.nextInt(3) == 0) "view" else "click")
+      }
+      out += event(rnd.nextInt(4).toLong, now - 90, "click")
+      val joinable = seen.filter(e => e.event_type == "view" || e.event_type == "click")
+      if (joinable.nonEmpty) for (_ <- 0 until 3) out += joinable(rnd.nextInt(joinable.size))
+      seen ++= out
+      rnd.shuffle(out.toSeq)
+    }
+    live :+ Seq(event(0L, 10000, "click"), event(0L, 10000, "purchase"))
+  }
+
+  private val windows = Seq((15L, 5L, "20 seconds"), (20L, 30L, "30 seconds"))
+
+  for ((seed, (joinSec, dedupSec, delay)) <- Seq(1L, 2L).zip(windows))
+    test(s"one keyed operator gives the chained operators' output (seed $seed: join ${joinSec}s, dedup ${dedupSec}s, delay $delay)") {
+      val data = seededBatches(seed)
+      val (chained, one) = withStatefulStreamingSettings {
+        (
+          withChainCheckOff(drive(chainedApply(joinSec, dedupSec, delay), data)),
+          drive(ProcessorApiJoin(_, joinSec, dedupSec, delay), data)
+        )
+      }
+      assert(one.rows == chained.rows, s"only one operator: ${one.rows.diff(chained.rows)}; only chained: ${chained.rows.diff(one.rows)}")
+      assert(one.plan.count(_ == "FlatMapGroupsWithStateExec") == 1, one.plan)
+      assert(chained.plan.count(_ == "FlatMapGroupsWithStateExec") == 2, chained.plan)
+      // the data reaches every case the join distinguishes
+      assert(one.dropped > 0, "no late row was dropped")
+      assert(one.rows.exists(_.endsWith(",None,None)")) && one.rows.exists(!_.endsWith(",None,None)")), "no matched or no unmatched click")
+    }
+
+  test("the attribution store expires in the batch the chained operators timed it out, whatever else the user holds") {
+    def e(id: Long, sec: Double, user: Long, kind: String) = Event(id, at(sec), user, kind, 0.0)
+    // join 10 s, dedup 30 s: user 1's attribution store is due at 101 + 20
+    // s, its pv stores at 101 + 60 s; another user's click moves the
+    // watermark to 125 s in between
+    val data = Seq(
+      Seq(e(1, 100, 1, "view"), e(2, 101, 1, "click"), e(3, 200, 3, "purchase")),
+      Seq(e(50, 130, 2, "click")),
+      Seq(e(51, 131, 2, "click")),
+      // the view expired with the store, so this click attributes to no view…
+      Seq(e(4, 127, 1, "click"), e(52, 90, 2, "click")),
+      // …and its redelivered copy finds it in that pv's dedup store
+      Seq(e(4, 127, 1, "click"))
+    )
+    val (chained, one) = withStatefulStreamingSettings {
+      (withChainCheckOff(drive(chainedApply(10, 30, "5 seconds"), data)), drive(ProcessorApiJoin(_, 10, 30, "5 seconds"), data))
+    }
+    assert(one.rows == chained.rows, s"only one operator: ${one.rows.diff(chained.rows)}; only chained: ${chained.rows.diff(one.rows)}")
+    assert(one.rows.count(_.startsWith("EnrichedClick(4,")) == 1, one.rows)
+  }
+
+  test("a checkpoint written by the two chained operators is refused on restart, with no output") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val data = seededBatches(3L)
+    val ckpt = Files.createTempDirectory("graft_papi_ckpt").toString
+    val in = MemoryStream[Event]
+    withStatefulStreamingSettings {
+      val before = withChainCheckOff(drive(chainedApply(15, 5, "20 seconds"), data.take(4), in, ckpt))
+      assert(before.rows.nonEmpty)
+      val emitted = mutable.ArrayBuffer.empty[String]
+      val q = ProcessorApiJoin(in.toDS(), 15, 5, "20 seconds").writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: Dataset[EnrichedClick], _: Long) =>
+          val rows = df.collect().map(_.toString)
+          emitted.synchronized(emitted ++= rows)
+          ()
+        }
+        .start()
+      val error =
+        try intercept[StreamingQueryException] {
+            in.addData(data(4))
+            q.processAllAvailable()
+          }
+        finally q.stop()
+      assert(error.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"), error.getMessage)
+      assert(emitted.isEmpty, s"the restart emitted ${emitted.size} rows")
+    }
   }
 
   // --- state retention: the property that keeps per-key state bounded at
@@ -326,7 +500,7 @@ class ProcessorApiJoinSpec extends SparkSpec {
     assert(out3.isEmpty, s"redelivered click re-emitted: $out3")
   }
 
-  // --- stage-1 attribution as a pure function
+  // --- attribution as a pure function
 
   test("attribute: views self-attribute, clicks take the latest view, ties break on event_id") {
     val batch = Seq(

@@ -101,9 +101,7 @@ class StateBytesSpec extends SparkSpec {
           events
         )),
         ("ProcessorApiJoin.userKeyed", 1, compilesPerAppend[Event](df => ProcessorApiJoin.userKeyed(df.as[Event]).toDF(), "append", events)),
-        ("ProcessorApiJoin.apply", 2, ProcessorApiJoin.withChainedStatefulAllowed(spark) {
-          compilesPerAppend[Event](df => ProcessorApiJoin(df.as[Event]).toDF(), "append", events)
-        }),
+        ("ProcessorApiJoin.apply", 1, compilesPerAppend[Event](df => ProcessorApiJoin(df.as[Event]).toDF(), "append", events)),
         ("streamingDomainQuota", 0, compilesPerAppend[DocRow](
           df => streamingDomainQuota(df.as[DocRow], k = 3).toDF(), "update",
           appends((a, i) => DocRow(a * 100L + i, s"s${i % 4}", (a * 7 + i) % 11))

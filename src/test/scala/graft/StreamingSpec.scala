@@ -31,19 +31,15 @@ class StreamingSpec extends SparkSpec {
     assert(streamingShufflePartitions(20000, 4) == 4)
   }
 
-  test("StreamingDemo sizes shuffle partitions from replay volume; env override wins; a started query runs at that size") {
+  test("a started stateful query runs at the streaming shuffle-partition rule's size") {
     import spark.implicits._
-    import graft.streaming.StreamingDemo.demoShufflePartitions
-    // the demo rule is GraftSession's, env-overridable
-    assert(demoShufflePartitions(5000, 32, Map.empty) == 8)
-    assert(demoShufflePartitions(5000, 32, Map("SPARK_GRAFT_STREAM_PARTITIONS" -> "32")) == 32)
     // the conf set at query START is what the state operator runs at
     // (and persists in the checkpoint thereafter) — assert it on a
     // live stateful query via the progress metrics
     implicit val sqlCtx = spark.sqlContext
     val prior = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      spark.conf.set("spark.sql.shuffle.partitions", demoShufflePartitions(100, 32, Map.empty).toString)
+      spark.conf.set("spark.sql.shuffle.partitions", graft.core.GraftSession.streamingShufflePartitions(100, 32).toString)
       val in = MemoryStream[Event]
       in.addData(Event(1L, ts(10), 1L, "view", 1.0))
       val q = StreamingOps
